@@ -16,16 +16,13 @@ visible as PushedFilters in ``.explain``).
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pw_etl_scrumptious_squad_spark.sources.state import (
-    Watermark,
-    WatermarkStore,
-    delta_watermark,
-)
+from pw_etl_scrumptious_squad_spark.sources.state import EPOCH, Watermark
 
 
 def delta_predicate(
@@ -138,25 +135,58 @@ def apply_diff(
 
 def incremental_extract(
     tables: dict[str, DataFrame],
-    store: WatermarkStore,
+    state: dict[str, Watermark],
     inclusive: bool = False,
-) -> dict[str, DataFrame]:
-    """Per-table dispatch loop (reference ``check_each_table``,
-    ``src/extract.py:202-238``): first sight of a table -> full scan
-    (EPOCH watermark passes everything); otherwise delta-only. Returns only
-    non-empty deltas, like the reference (``src/extract.py:230-237``).
+) -> tuple[dict[str, DataFrame], dict[str, Watermark]]:
+    """Per-table dispatch (reference ``check_each_table``,
+    ``src/extract.py:202-238``) decided by ONE Spark job for all tables:
+    first sight of a table -> full scan; otherwise delta-only. Returns
+    only non-empty deltas, like the reference (``src/extract.py:230-237``),
+    and the advanced state. Pure: the caller loads and commits the state
+    (``plans.etl.extract`` commits after staging).
 
-    Advances the store as a side effect, replacing the reference's
-    read-back-the-last-file watermark recovery.
+    The job is a ``unionAll`` of ``(table index, created_at,
+    last_updated)`` projections grouped by the index — one shuffle for
+    any number of tables (a union of per-table aggregates would plan one
+    exchange, hence one AQE job, per table). Exact against the
+    per-delta rule ``max(prev, delta_watermark(extract_delta(...)))``:
+    a row passes the delta predicate iff one of its audit timestamps
+    passes the stored watermark (``>``, or ``>=`` when inclusive), so the
+    delta is non-empty iff a snapshot maximum does, and the monotone max
+    over the delta equals ``max(prev, snapshot max)``. NULL timestamps
+    never pass; a table whose maxima are both NULL (empty) yields no
+    delta. Tables in ``state`` but not in ``tables`` keep their
+    watermark.
     """
-    state = store.load()
+    new_state = dict(state)
+    if not tables:
+        return {}, new_state
+    names = list(tables)
+    probes = [
+        df.select(F.lit(i).alias("t"), "created_at", "last_updated")
+        for i, df in enumerate(tables.values())
+    ]
+    maxima = {
+        names[r["t"]]: (r["c"], r["u"])
+        for r in functools.reduce(DataFrame.unionAll, probes)
+        .groupBy("t")
+        .agg(F.max("created_at").alias("c"), F.max("last_updated").alias("u"))
+        .collect()
+    }
+
+    def passes(seen: datetime | None, mark: datetime) -> bool:
+        return seen is not None and (seen >= mark if inclusive else seen > mark)
+
     out: dict[str, DataFrame] = {}
     for name, df in tables.items():
-        wm = state.get(name)
-        delta = extract_delta(df, wm, inclusive) if wm is not None else df
-        new_wm = delta_watermark(delta)
-        if new_wm is None:
+        c, u = maxima.get(name, (None, None))
+        if c is None and u is None:
             continue  # empty delta — reference drops empties too
-        out[name] = delta
-        store.advance(name, new_wm)
-    return out
+        wm = state.get(name)
+        if wm is None:
+            out[name] = df
+            new_state[name] = Watermark(EPOCH, EPOCH).merge(c, u)
+        elif passes(c, wm.created_at) or passes(u, wm.last_updated):
+            out[name] = extract_delta(df, wm, inclusive)
+            new_state[name] = wm.merge(c, u)
+    return out, new_state

@@ -6,9 +6,12 @@ sort-based scan (``src/extract.py:176-199``) — fragile (state dies with the
 file, and the file is overwritten every cycle) and O(n log n) where a max-agg
 is O(n). Here the state is an explicit tiny parquet table
 ``(table_name, max_created_at, max_last_updated)`` — one row per source
-table — read once per cycle and atomically replaced. At 100 TB the state
-table is still a few KB; the expensive part (the max-agg over the delta)
-runs distributed via ``df.agg(max(...))``.
+table. A cycle reads it once (:meth:`WatermarkStore.load`), decides every
+table's delta against it in memory, and replaces it once
+(:meth:`WatermarkStore.save`) after the deltas are staged, so a crash
+before the commit leaves the old watermarks and the next cycle re-stages
+the same rows. At 100 TB the state table is still a few KB; the expensive
+part (the maxima over the source snapshots) runs distributed.
 """
 
 from __future__ import annotations
@@ -40,6 +43,16 @@ class Watermark:
     created_at: datetime
     last_updated: datetime
 
+    def merge(
+        self, created_at: datetime | None, last_updated: datetime | None
+    ) -> Watermark:
+        """Monotone max with observed maxima (NULL = nothing observed): a
+        stale or empty observation never regresses the watermark."""
+        return Watermark(
+            created_at=max(self.created_at, created_at or EPOCH),
+            last_updated=max(self.last_updated, last_updated or EPOCH),
+        )
+
 
 def delta_watermark(df: DataFrame) -> Watermark | None:
     """Max-agg watermark over a delta (reference ``get_most_recent_time``,
@@ -52,8 +65,13 @@ def delta_watermark(df: DataFrame) -> Watermark | None:
     return Watermark(created_at=row["c"] or EPOCH, last_updated=row["u"] or EPOCH)
 
 
+def _ntz_literal(ts: datetime) -> str:
+    return f"TIMESTAMP_NTZ '{ts.isoformat(sep=' ', timespec='microseconds')}'"
+
+
 class WatermarkStore:
-    """Parquet-backed per-table watermark state."""
+    """Parquet-backed per-table watermark state: one ``load`` and at most
+    one ``save`` per extract cycle."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -72,26 +90,25 @@ class WatermarkStore:
             for r in rows
         }
 
-    def get(self, table: str) -> Watermark:
-        return self.load().get(table, Watermark(EPOCH, EPOCH))
-
     def save(self, state: dict[str, Watermark]) -> None:
-        rows = [
-            (name, wm.created_at, wm.last_updated)
-            for name, wm in sorted(state.items())
-        ]
-        df = self.spark.createDataFrame(rows, STATE_SCHEMA)
+        """Replace the whole state. The rows are a ``VALUES`` local relation
+        planned on the JVM side (``createDataFrame`` over a Python list
+        would start a Python-worker RDD); table names bind as query
+        parameters and timestamps render as exact microsecond
+        ``TIMESTAMP_NTZ`` literals."""
+        if state:
+            items = sorted(state.items())
+            values = ", ".join(
+                f"(:t{i}, {_ntz_literal(wm.created_at)},"
+                f" {_ntz_literal(wm.last_updated)})"
+                for i, (_, wm) in enumerate(items)
+            )
+            df = self.spark.sql(
+                f"SELECT * FROM VALUES {values}"
+                " AS t(table_name, max_created_at, max_last_updated)",
+                args={f"t{i}": name for i, (name, _) in enumerate(items)},
+            )
+        else:
+            df = self.spark.createDataFrame([], STATE_SCHEMA)
         # Tiny table: single file, atomic-enough overwrite.
         df.coalesce(1).write.mode("overwrite").parquet(self.path)
-
-    def advance(self, table: str, wm: Watermark | None) -> None:
-        """Merge a new delta watermark for one table (monotone max)."""
-        if wm is None:
-            return
-        state = self.load()
-        prev = state.get(table, Watermark(EPOCH, EPOCH))
-        state[table] = Watermark(
-            created_at=max(prev.created_at, wm.created_at),
-            last_updated=max(prev.last_updated, wm.last_updated),
-        )
-        self.save(state)

@@ -3,8 +3,15 @@ test/test_extract.py:404-518 — after a first extraction, row 7 qualifies by
 created_at, row 8 by last_updated, row 9 ties the watermark and is dropped
 by the strict-> predicate)."""
 
+import functools
+import time
+import uuid
 from datetime import datetime
 from decimal import Decimal
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from pw_etl_scrumptious_squad_spark.operators.cdc import (
     extract_delta,
@@ -58,40 +65,169 @@ def test_delta_watermark_max_agg(totesys):
     assert wm.last_updated == SEED_TS
 
 
-def test_watermark_store_roundtrip(spark, tmp_path):
+def test_watermark_store_roundtrip(spark, totesys, tmp_path):
     store = WatermarkStore(spark, str(tmp_path / "state.parquet"))
     assert store.load() == {}
-    assert store.get("sales_order").created_at == EPOCH
-    store.save({"sales_order": Watermark(SEED_TS, SEED_TS)})
-    assert store.get("sales_order") == Watermark(SEED_TS, SEED_TS)
-    # advance is a monotone max: stale watermarks never regress state
-    store.advance("sales_order", Watermark(LATER_CREATED, SEED_TS))
-    assert store.get("sales_order").created_at == LATER_CREATED
-    store.advance("sales_order", Watermark(EPOCH, EPOCH))
-    assert store.get("sales_order").created_at == LATER_CREATED
+    store.save({"sales_order": Watermark(LATER_CREATED, SEED_TS)})
+    state = store.load()
+    assert state == {"sales_order": Watermark(LATER_CREATED, SEED_TS)}
+    # the watermark advance is a monotone max: a source whose maxima sit
+    # below the stored watermark stages nothing and never regresses state
+    deltas, advanced = incremental_extract(
+        {"sales_order": totesys["sales_order"]}, state
+    )
+    assert deltas == {}
+    assert advanced == state
+    assert state["sales_order"].merge(EPOCH, None) == state["sales_order"]
+    assert state["sales_order"].merge(None, LATER_UPDATED) == Watermark(
+        LATER_CREATED, LATER_UPDATED
+    )
+
+
+def test_watermark_store_roundtrips_microseconds(spark, tmp_path):
+    """save/load keeps every table, microsecond-exact TIMESTAMP_NTZ
+    values, and names that need quoting in SQL."""
+    store = WatermarkStore(spark, str(tmp_path / "state.parquet"))
+    state = {
+        f"t{i}": Watermark(
+            datetime(2023, 1, 1, 10, 0, 0, 1 + i),
+            datetime(1999, 12, 31, 23, 59, 59, 999999 - i),
+        )
+        for i in range(11)
+    }
+    state["o'brien\\x"] = Watermark(EPOCH, datetime(2024, 2, 29, 0, 0, 0, 500))
+    store.save(state)
+    assert store.load() == state
+    store.save({})
+    assert store.load() == {}
 
 
 def test_incremental_extract_cycles(spark, totesys, tmp_path):
     """First cycle: full extraction (EPOCH watermark). Second: empty deltas.
     Third (after late rows appear): only the qualifying rows."""
-    store = WatermarkStore(spark, str(tmp_path / "state.parquet"))
     tables = {"sales_order": totesys["sales_order"]}
 
-    first = incremental_extract(tables, store)
+    first, state = incremental_extract(tables, {})
     assert sorted(r["sales_order_id"] for r in first["sales_order"].collect()) == [
         1, 2, 3, 4, 5, 6,
     ]
+    assert state == {"sales_order": Watermark(SEED_TS, SEED_TS)}
 
-    second = incremental_extract(tables, store)
+    second, same = incremental_extract(tables, state)
     assert second == {}  # nothing new — non-empty-only contract
+    assert same == state
 
     with_late = {"sales_order": _sales_with_late_rows(spark, totesys)}
-    third = incremental_extract(with_late, store)
+    third, advanced = incremental_extract(with_late, state)
     assert sorted(r["sales_order_id"] for r in third["sales_order"].collect()) == [7, 8]
     # watermark advanced to the late rows' timestamps
-    wm = store.get("sales_order")
-    assert wm.created_at == LATER_CREATED
-    assert wm.last_updated == LATER_UPDATED
+    assert advanced["sales_order"] == Watermark(LATER_CREATED, LATER_UPDATED)
+    assert state == {"sales_order": Watermark(SEED_TS, SEED_TS)}  # input untouched
+
+
+def _reference_extract(tables, state, inclusive):
+    """The per-delta rule the one-job decision replaced: one delta and
+    one max-agg job per table, watermark = max(prev, delta maxima)."""
+    out, new_state = {}, dict(state)
+    for name, df in tables.items():
+        wm = state.get(name)
+        delta = extract_delta(df, wm, inclusive) if wm is not None else df
+        seen = delta_watermark(delta)
+        if seen is None:
+            continue
+        out[name] = delta
+        prev = state.get(name, Watermark(EPOCH, EPOCH))
+        new_state[name] = Watermark(
+            max(prev.created_at, seen.created_at),
+            max(prev.last_updated, seen.last_updated),
+        )
+    return out, new_state
+
+
+W0 = datetime(2023, 5, 1, 12, 0, 0, 250)
+BEFORE = datetime(2023, 4, 1, 9, 0, 0)
+AFTER = datetime(2023, 6, 1, 9, 0, 0, 1)
+
+
+def _hostile_inputs(spark):
+    schema = "id INT, created_at TIMESTAMP_NTZ, last_updated TIMESTAMP_NTZ"
+    rows = {
+        # NULL audit columns, alone and together, beside one real change
+        "nulls": [
+            (1, None, AFTER), (2, AFTER, None), (3, None, None), (4, BEFORE, BEFORE)
+        ],
+        # only last_updated moved past the watermark
+        "bump": [(1, BEFORE, AFTER), (2, BEFORE, BEFORE)],
+        "empty": [],
+        # rows tying the watermark: dropped when strict, kept when inclusive
+        "ties": [(1, W0, W0), (2, BEFORE, W0), (3, W0, BEFORE)],
+        # source maxima below the stored watermark
+        "stale": [(1, BEFORE, BEFORE)],
+        # first sight: full scan, or no delta when every audit value is NULL
+        "fresh": [(1, BEFORE, None), (2, None, AFTER)],
+        "fresh_nulls": [(1, None, None)],
+        "fresh_empty": [],
+    }
+    tables = {name: spark.createDataFrame(r, schema) for name, r in rows.items()}
+    state = {
+        name: Watermark(W0, W0)
+        for name in ("nulls", "bump", "empty", "ties", "stale")
+    }
+    # in the state but absent from the snapshots: keeps its watermark
+    state["gone"] = Watermark(BEFORE, AFTER)
+    return tables, state
+
+
+def _tagged_rows(deltas):
+    """Every delta's rows tagged with its table, in one job."""
+    tagged = [df.withColumn("table", F.lit(name)) for name, df in deltas.items()]
+    return sorted(functools.reduce(DataFrame.unionAll, tagged).collect(), key=repr)
+
+
+@pytest.mark.parametrize("inclusive", [False, True])
+def test_one_job_decision_matches_per_delta_rule(spark, inclusive):
+    tables, state = _hostile_inputs(spark)
+    deltas, new_state = incremental_extract(tables, state, inclusive=inclusive)
+    want_deltas, want_state = _reference_extract(tables, state, inclusive)
+    assert new_state == want_state
+    assert sorted(deltas) == sorted(want_deltas)
+    assert _tagged_rows(deltas) == _tagged_rows(want_deltas)
+    assert new_state["gone"] == state["gone"]
+    assert "stale" not in deltas and "empty" not in deltas
+    assert "fresh_nulls" not in deltas and "fresh_nulls" not in new_state
+    assert ("ties" in deltas) == inclusive
+
+
+def _jobs_started(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"cdc-job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "incremental_extract job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    deadline = time.monotonic() + 10
+    seen = -1
+    while time.monotonic() < deadline:
+        now = len(sc.statusTracker().getJobIdsForGroup(group))
+        if now == seen and now > 0:
+            return now
+        seen = now
+        time.sleep(0.2)
+    return seen
+
+
+def test_incremental_extract_job_budget_is_flat_in_table_count(spark, totesys):
+    """The CDC decision is one union-then-group job whatever the number of
+    tables: 2 tables and all 11 start the same number of Spark jobs."""
+    two = {name: totesys[name] for name in ("sales_order", "payment")}
+    small = _jobs_started(spark, lambda: incremental_extract(two, {}))
+    full = _jobs_started(spark, lambda: incremental_extract(dict(totesys), {}))
+    assert len(totesys) == 11
+    assert small == full
+    assert 1 <= full <= 2, full
 
 
 # ---------------------------------------------------------------------------

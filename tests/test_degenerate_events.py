@@ -79,9 +79,6 @@ def degenerate_sf(spark, tmp_path_factory):
 
 
 def _events_only_entries():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     oracles = entrymod.oracle_sql(SF_SRC)
@@ -107,13 +104,8 @@ def test_events_only_battery_is_broad():
 
 @pytest.mark.parametrize("name", _events_only_entries())
 def test_degenerate_events_oracle_parity(spark, degenerate_sf, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check import value_hash
+    from tools.check import value_hash
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql(degenerate_sf)

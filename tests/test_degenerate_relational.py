@@ -114,9 +114,6 @@ def degenerate_sf(spark, tmp_path_factory):
 
 
 def _relational_entries():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     oracles = entrymod.oracle_sql(SF_SRC)
@@ -140,13 +137,8 @@ def test_relational_battery_is_broad():
 
 @pytest.mark.parametrize("name", _relational_entries())
 def test_degenerate_relational_oracle_parity(spark, degenerate_sf, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check import value_hash
+    from tools.check import value_hash
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql(degenerate_sf)
@@ -199,13 +191,8 @@ def test_degenerate_c11_star_lifecycle_parity(spark, degenerate_sf):
     keys, dup lines, zero totals flow through every fixture derivation
     and all 11 builders; NULL timestamps must serialize as '~' on both
     engines)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check import value_hash
+    from tools.check import value_hash
 
     name = "c11_star_lifecycle"
     sdf = entrymod.queries()[name](spark, degenerate_sf)

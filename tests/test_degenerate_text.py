@@ -107,13 +107,8 @@ def test_documents_only_battery_is_broad():
 
 @pytest.mark.parametrize("name", _documents_only_entries())
 def test_degenerate_corpus_oracle_parity(spark, degenerate_sf, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check import value_hash  # check.py's canonicalizer
+    from tools.check import value_hash  # check.py's canonicalizer
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql(degenerate_sf)

@@ -1,6 +1,9 @@
 """End-to-end batch ETL over a parquet OLTP snapshot (reference model:
 test/test_end_to_end.py — full E->T->L, then a second incremental cycle)."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from pw_etl_scrumptious_squad_spark.plans import etl
 from pw_etl_scrumptious_squad_spark.schemas import STAR_COLUMNS
 from pw_etl_scrumptious_squad_spark.sources import parquet as lake
@@ -32,6 +35,61 @@ def test_run_batch_etl(spark, totesys, tmp_path):
     # still rebuild dims (the reference re-pushes full dims each run)
     deltas = etl.extract(spark, source, staging, state)
     assert deltas == {}
+
+
+def test_failed_staging_write_keeps_watermarks(spark, totesys, tmp_path, monkeypatch):
+    """The state commits only after every delta is staged: a staging write
+    that fails leaves the stored watermarks as they were, and the next
+    extract stages the same rows again."""
+    from decimal import Decimal
+
+    from pw_etl_scrumptious_squad_spark.schemas import OLTP_SCHEMAS
+    from pw_etl_scrumptious_squad_spark.sources.state import WatermarkStore
+    from tests.conftest import LATER_CREATED, LATER_UPDATED, SEED_TS
+
+    source = str(tmp_path / "oltp")
+    staging = str(tmp_path / "staging")
+    state = str(tmp_path / "state.parquet")
+    for name in ("design", "sales_order"):
+        lake.write_table(totesys[name], source, name)
+    etl.extract(spark, source, staging, state)
+    before = WatermarkStore(spark, state).load()
+
+    late = spark.createDataFrame(
+        [
+            (7, 1, 1, 1, 5, Decimal("9.99"), 1, "2023-03-01", "2023-03-05", 1,
+             LATER_CREATED, SEED_TS),
+            (8, 1, 1, 1, 5, Decimal("9.99"), 1, "2023-03-01", "2023-03-05", 1,
+             SEED_TS, LATER_UPDATED),
+        ],
+        OLTP_SCHEMAS["sales_order"],
+    )
+    lake.write_table(totesys["sales_order"].unionByName(late), source, "sales_order")
+    new_design = totesys["design"].limit(1).withColumn(
+        "created_at", F.lit(LATER_CREATED).cast("timestamp_ntz")
+    )
+    lake.write_table(totesys["design"].unionByName(new_design), source, "design")
+
+    real_write = lake.write_table
+
+    def failing_write(df, base_dir, name, *args, **kwargs):
+        if name == "sales_order":
+            raise OSError("staging volume full")
+        return real_write(df, base_dir, name, *args, **kwargs)
+
+    monkeypatch.setattr(lake, "write_table", failing_write)
+    with pytest.raises(OSError, match="staging volume full"):
+        etl.extract(spark, source, staging, state)
+    assert WatermarkStore(spark, state).load() == before
+
+    monkeypatch.setattr(lake, "write_table", real_write)
+    deltas = etl.extract(spark, source, staging, state)
+    assert sorted(deltas) == ["design", "sales_order"]
+    staged = lake.read_table(spark, staging, "sales_order")
+    assert sorted(r["sales_order_id"] for r in staged.collect()) == [7, 8]
+    after = WatermarkStore(spark, state).load()
+    assert after["sales_order"].created_at == LATER_CREATED
+    assert after["sales_order"].last_updated == LATER_UPDATED
 
 
 def test_load_transactional_pins_a_consistent_star(spark, totesys, tmp_path):

@@ -39,7 +39,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -735,7 +736,9 @@ def main() -> None:
     if "--only" in args:
         only = set(args[args.index("--only") + 1].split(","))
     merge = "--merge" in args
-    base = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/root/repo/scale_data")
+    base = os.environ.get(
+        "SPARK_GRAFT_SCALE_DIR", os.path.join(ROOT, "scale_data")
+    )
 
     spark = get_spark(app_name="bench-scale")
     spark.sparkContext.setLogLevel("ERROR")

@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from pw_etl_scrumptious_squad_spark import catalog as catmod  # noqa: E402
@@ -29,7 +31,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cat = catmod.catalog()
     try:
-        current = open("/root/repo/PLANS.md").read()
+        current = open(os.path.join(ROOT, "PLANS.md")).read()
         preamble = current.split(MARKER)[0].rstrip() + "\n\n" if MARKER in current else ""
     except FileNotFoundError:
         preamble = ""
@@ -50,7 +52,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
 

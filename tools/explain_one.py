@@ -11,7 +11,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pw_etl_scrumptious_squad_spark import catalog as catmod
 from pw_etl_scrumptious_squad_spark.session import get_spark
@@ -24,13 +25,14 @@ def main() -> None:
     spark = get_spark(app_name="explain-one")
     spark.sparkContext.setLogLevel("ERROR")
     cat = catmod.catalog()
-    os.makedirs("/root/repo/plans/r11", exist_ok=True)
+    out_dir = os.path.join(ROOT, "plans", "r11")
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = cat[name].build(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        path = f"/root/repo/plans/r11/{name}_{suffix}.txt"
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(buf.getvalue())
         print(f"wrote {path} ({buf.getvalue().count('Exchange')} Exchange mentions)")

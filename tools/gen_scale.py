@@ -3,7 +3,7 @@ measurements (tools/bench_scale.py): every 100 TB claim in this repo
 should rest on a measured curve, not only on plan inspection.
 
 Usage:  python tools/gen_scale.py <k> [out_dir]
-        (out_dir defaults to /root/repo/scale_data/x<k>)
+        (out_dir defaults to scale_data/x<k> in the repository root)
 
 Construction: each table is replicated k times ENTIRELY inside Spark
 (one broadcast cross join with a k-row copies frame — map-side, no
@@ -40,7 +40,8 @@ import hashlib
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,7 +145,7 @@ def main() -> None:
     out_dir = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else f"/root/repo/scale_data/x{k}"
+        else os.path.join(ROOT, "scale_data", f"x{k}")
     )
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name=f"gen-scale-x{k}")
