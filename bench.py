@@ -8,9 +8,10 @@ clip it — rounds 6 and 7 both recorded parsed:null from clipped lines):
 Per-query timings, raw runs, and spread live in bench_evidence.json
 beside this script, referenced from the headline line.
 
-Execution is forced with a noop-format write (full computation, no sink
-cost, nothing collected to the driver). Each query runs once after a small
-warm-up query primes the JVM/codegen.
+The timing protocol (warm-up, training hoists, noop-sink timing, load
+average) is defined once, in tools/harness.py. Each query runs twice
+after the warm-up, a third time when the first two disagree by >20%, and
+the min is its time.
 
 MEASUREMENT PROTOCOL (round 5): this host is shared — identical code has
 measured >4x run-to-run swings on the slowest queries, which made
@@ -31,16 +32,17 @@ stdout record must stay small enough to never clip.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pw_etl_scrumptious_squad_spark import catalog as catmod
 from pw_etl_scrumptious_squad_spark.session import get_spark
+from tools.harness import hoist_training, load_avg, time_noop, warm_up
 
 # Round-2 catalog consolidation renames (perf continuity vs BENCH_r01):
 #   q02_topk_join+q32 -> z02_topk_pagination; q04_rollup absorbs q21_cube;
@@ -186,96 +188,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     cat = catmod.catalog()
 
-    # warm-up: prime JVM, codegen, and every table's parquet footer (cheap
-    # count per table; no query results are cached — each timed query still
-    # does all of its own scan + compute)
-    from pw_etl_scrumptious_squad_spark.sources.parquet import read_table
-
-    # spin up the Python UDF workers first (mapInPandas queries otherwise
-    # pay per-thread interpreter startup inside their timing) — the table
-    # counts below then absorb the post-spawn settling the first JVM query
-    # would otherwise eat
-    n_workers = spark.sparkContext.defaultParallelism
-    spark.range(n_workers).repartition(n_workers).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        read_table(spark, sf_dir, t).count()
-    cat["r05_watermark_max"].build(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # train-and-memoize the IVF centroids outside the timed loop: training
-    # is the data-preparation step (the s02/y37 queries measure cell
-    # assignment, probe routing, and rank math — not Spark ML fitting).
-    # The fit cost is real, though, so it is timed and reported as its own
-    # metric rather than hidden: at 100 TB you train on a sample once and
-    # amortize it over every probe.
-    from pw_etl_scrumptious_squad_spark.catalog_ext import (
-        ivf_centroid_literals,
-        pq_codebook_literals,
-    )
-
-    train_start = time.perf_counter()
-    ivf_centroid_literals(sf_dir, spark)
-    ivf_train_seconds = round(time.perf_counter() - train_start, 3)
-    # same hoist for the y59 PQ codebooks (train once per sf, memoized):
-    # the query measures encode/LUT/ADC math, not k-means fitting
-    train_start = time.perf_counter()
-    pq_codebook_literals(sf_dir, spark)
-    pq_train_seconds = round(time.perf_counter() - train_start, 3)
-    # same hoist for the y74 bucketed layout: writing the bucketed copies
-    # is the one-time shuffle the layout AMORTIZES (at 100 TB you bucket
-    # once and join shuffle-free forever after); the query measures the
-    # recurring join+agg. The write cost is real and reported below.
-    from pw_etl_scrumptious_squad_spark.operators import bucketed as _bkt
-
-    # publish-then-adopt means a prior session's published layout is
-    # ADOPTED (DDL registration only) — record which cost this run paid
-    _bkt_mode = "build"
-    for _tbl in ("lineitem", "orders"):
-        _name = _bkt.bucket_table_name(
-            _tbl, sf_dir, f"{_tbl[0]}_orderkey", _bkt.DEFAULT_BUCKETS
-        )
-        _root = os.path.join(
-            os.environ.get("SPARK_GRAFT_TMP", "/tmp"), "pw_etl_bucketed"
-        )
-        if os.path.exists(os.path.join(_root, _name, "_SUCCESS")):
-            _bkt_mode = "adopt"
-    train_start = time.perf_counter()
-    _bkt.ensure_bucketed(
-        spark, read_table(spark, sf_dir, "lineitem"), "lineitem", sf_dir, "l_orderkey"
-    )
-    _bkt.ensure_bucketed(
-        spark, read_table(spark, sf_dir, "orders"), "orders", sf_dir, "o_orderkey"
-    )
-    bucketize_seconds = round(time.perf_counter() - train_start, 3)
-    # same hoist for the y79/y80 quality classifier: training is the
-    # iterative seed-set fit (amortized once per corpus at 100 TB); the
-    # y80 headline entry measures the recurring broadcast map-side apply
-    from pw_etl_scrumptious_squad_spark.catalog_ext import _qc_weights
-
-    train_start = time.perf_counter()
-    _qc_weights(sf_dir, spark)
-    qc_train_seconds = round(time.perf_counter() - train_start, 3)
-    # same hoist for the y89 unigram vocabulary and y96 WordPiece pieces
-    # (train once per sf, memoized — the y88/y95 TRAINING jobs; the
-    # headline entries time the recurring APPLY). Recorded here so the
-    # hoisted cost is visible in the evidence next to ivf/pq/qc
-    # (round-10 verdict item 6: complete the train-seconds convention).
-    from pw_etl_scrumptious_squad_spark.catalog_ext import (
-        unigram_vocab_literals,
-        wordpiece_pieces,
-    )
-
-    train_start = time.perf_counter()
-    unigram_vocab_literals(sf_dir, spark)
-    unigram_train_seconds = round(time.perf_counter() - train_start, 3)
-    train_start = time.perf_counter()
-    wordpiece_pieces(sf_dir, spark)
-    wordpiece_train_seconds = round(time.perf_counter() - train_start, 3)
+    warm_up(spark, sf_dir)
+    time_noop(lambda: cat["r05_watermark_max"].build(spark, sf_dir))
+    # training is data preparation, amortized over every later query: the
+    # headline entries time the recurring apply, and the one-time fits are
+    # reported as their own *_train_seconds / bucketize_seconds keys
+    hoists = hoist_training(spark, sf_dir)
 
     # adaptive best-of-N per query: a single pass is dominated by JVM/GC
     # noise from neighboring queries (observed +-7s swings on a 23-query
@@ -283,32 +201,17 @@ def main() -> None:
     # back-to-back runs (observed q01 4.2s/3.9s cold vs 1.2s steady). Run
     # twice; if the two disagree by >20%, a third run breaks the tie. The
     # min reports the steady-state cost of the plan itself.
-    try:
-        load_start = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover - non-unix
-        load_start = None
+    load_start = load_avg()
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
-        runs = []
-        for _ in range(2):
-            start = time.perf_counter()
-            cat[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - start)
+        build = functools.partial(cat[name].build, spark, sf_dir)
+        runs = [time_noop(build), time_noop(build)]
         if abs(runs[0] - runs[1]) > 0.2 * min(runs):
-            start = time.perf_counter()
-            cat[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - start)
+            runs.append(time_noop(build))
         timings[name] = round(min(runs), 3)
         all_runs[name] = [round(r, 3) for r in runs]
-    try:
-        load_end = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover - non-unix
-        load_end = None
+    load_end = load_avg()
 
     total = round(sum(timings.values()), 3)
     spread = {
@@ -332,13 +235,7 @@ def main() -> None:
                 "queries": timings,
                 "query_runs": all_runs,
                 "spread": spread,
-                "ivf_train_seconds": ivf_train_seconds,
-                "pq_train_seconds": pq_train_seconds,
-                "bucketize_seconds": bucketize_seconds,
-                "bucketize_mode": _bkt_mode,
-                "qc_train_seconds": qc_train_seconds,
-                "unigram_train_seconds": unigram_train_seconds,
-                "wordpiece_train_seconds": wordpiece_train_seconds,
+                **hoists,
                 "load_avg_start": load_start,
                 "load_avg_end": load_end,
                 "sf": sf,

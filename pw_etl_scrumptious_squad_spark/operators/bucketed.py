@@ -118,6 +118,12 @@ def _source_fingerprint(sf_dir: str, spark: SparkSession | None = None) -> str:
     return fp
 
 
+def bucketed_root() -> str:
+    """Where ``ensure_bucketed`` publishes layouts unless given a
+    ``base_dir``: ``$SPARK_GRAFT_TMP/pw_etl_bucketed``."""
+    return os.path.join(os.environ.get("SPARK_GRAFT_TMP", "/tmp"), "pw_etl_bucketed")
+
+
 def bucket_table_name(
     prefix: str,
     sf_dir: str,
@@ -204,9 +210,7 @@ def ensure_bucketed(
     memo_key = (spark.sparkContext.applicationId, table)
     if memo_key in _WRITTEN and spark.catalog.tableExists(table):
         return table
-    root = base_dir or os.path.join(
-        os.environ.get("SPARK_GRAFT_TMP", "/tmp"), "pw_etl_bucketed"
-    )
+    root = base_dir or bucketed_root()
     final = os.path.join(root, table)
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()

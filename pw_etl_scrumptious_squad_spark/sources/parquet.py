@@ -144,20 +144,6 @@ def _read_parquet_uncached(
     return df
 
 
-def load_tables(
-    spark: SparkSession, base_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load a dict of named DataFrames (reference keeps dict-of-frames IR,
-    ``src/extract.py:214`` / ``src/load.py:65-74``)."""
-    if names is None:
-        names = sorted(
-            f[: -len(".parquet")]
-            for f in os.listdir(base_dir)
-            if f.endswith(".parquet")
-        )
-    return {name: read_table(spark, base_dir, name) for name in names}
-
-
 def table_exists(
     base_dir: str, name: str, spark: SparkSession | None = None
 ) -> bool:

@@ -17,22 +17,28 @@ runs:
 Reading: ratio ~= 4 (the core ratio) = compute-bound and parallel;
 ratio ~= 1 = serialized (driver/job-count floor — expected for the
 iterative loop entries y73/y81/y97, which run N sequential jobs by
-design); in between = partially parallel. min-of-2 per query after the
-standard warm-up, noop sink (guide §1.4).
+design); in between = partially parallel. min-of-2 per query; the
+warm-up and the noop-sink timing are tools/harness.py's. A missing
+``--out`` file is created.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pw_etl_scrumptious_squad_spark import catalog as catmod  # noqa: E402
 from pw_etl_scrumptious_squad_spark.session import get_spark  # noqa: E402
-from pw_etl_scrumptious_squad_spark.sources.parquet import read_table  # noqa: E402
+from tools.harness import (  # noqa: E402
+    load_avg,
+    load_json,
+    time_noop,
+    update_json_section,
+    warm_up,
+)
 
 # The driver-r10 top cost centers (quiet-host evidence), minus the
 # training-literal entries (their hoists would dominate), plus two
@@ -62,55 +68,29 @@ def main() -> None:
     args = sys.argv[1:]
     organic = args[0] if args else "scale_data/sf1_organic"
     out_path = args[args.index("--out") + 1] if "--out" in args else "BENCH_scale.json"
+    section = load_json(out_path).get("cores_scaling") or {
+        "dir": organic,
+        "method": "min-of-2 noop-sink seconds per query at organic "
+        "sf1 under local[cpus]; ratio_8_over_32 ~= 4 means "
+        "compute-bound, ~= 1 means a sequential job floor",
+        "runs": {},
+    }
 
     spark = get_spark(app_name="bench-cores")
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.defaultParallelism
     cat = catmod.catalog()
+    warm_up(spark, organic)
 
-    n_workers = spark.sparkContext.defaultParallelism
-    spark.range(n_workers).repartition(n_workers).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        read_table(spark, organic, t).count()
-
-    try:
-        load_start = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover
-        load_start = None
+    load_start = load_avg()
     timings: dict[str, float] = {}
     for name in QUERIES:
         spark.sparkContext.setJobDescription(f"bench-cores {name}")
-        runs = []
-        for _ in range(2):
-            start = time.perf_counter()
-            cat[name].build(spark, organic).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - start)
-        timings[name] = round(min(runs), 3)
+        build = functools.partial(cat[name].build, spark, organic)
+        timings[name] = round(min(time_noop(build) for _ in range(2)), 3)
         print(f"{name:38} {timings[name]:8.3f} s", flush=True)
-    try:
-        load_end = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover
-        load_end = None
+    load_end = load_avg()
 
-    with open(out_path) as f:
-        payload = json.load(f)
-    section = payload.setdefault(
-        "cores_scaling",
-        {
-            "dir": organic,
-            "method": "min-of-2 noop-sink seconds per query at organic "
-            "sf1 under local[cpus]; ratio_8_over_32 ~= 4 means "
-            "compute-bound, ~= 1 means a sequential job floor",
-            "runs": {},
-        },
-    )
     section["runs"][str(cpus)] = {
         "queries": timings,
         "load_avg_start": load_start,
@@ -124,9 +104,7 @@ def main() -> None:
             for k in sorted(q32)
             if k in q8 and q32[k] > 0
         }
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
-        f.write("\n")
+    update_json_section(out_path, "cores_scaling", section)
     print(f"recorded cores run cpus={cpus} into {out_path}")
 
 

@@ -18,20 +18,22 @@ Usage:  python tools/bench_gate.py [--floors tools/bench_floors.json]
 The gate queries are deliberately the CHEAP, stable headliners: their
 runtimes are dominated by plan shape (scan + a shuffle or two), not by
 JVM/GC noise, so a 1.5x swing on a quiet host is a real regression.
+Warm-up, training hoists and noop-sink timing are tools/harness.py's,
+so a gate time is measured exactly as bench.py measures that query.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pw_etl_scrumptious_squad_spark import catalog as catmod
-from pw_etl_scrumptious_squad_spark.session import get_spark
-from pw_etl_scrumptious_squad_spark.sources.parquet import read_table
+from pw_etl_scrumptious_squad_spark import catalog as catmod  # noqa: E402
+from pw_etl_scrumptious_squad_spark.session import get_spark  # noqa: E402
+from tools.harness import hoist_training, load_avg, time_noop, warm_up  # noqa: E402
 
 GATE_QUERIES = [
     "r06_cdc_filter",
@@ -79,35 +81,26 @@ def main() -> int:
     update = "--update" in args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    try:
-        load = os.getloadavg()[0]
-    except OSError:  # pragma: no cover - non-unix
-        load = 0.0
+    load = load_avg() or 0.0
     cores = os.cpu_count() or 1
     advisory = load > cores
 
     spark = get_spark(app_name="bench-gate")
     spark.sparkContext.setLogLevel("ERROR")
     cat = catmod.catalog()
-    for t in ("orders", "lineitem", "events", "documents"):
-        read_table(spark, sf_dir, t).count()
+    warm_up(spark, sf_dir)
+    print(f"hoists={json.dumps(hoist_training(spark, sf_dir))}")
 
     results: dict[str, float] = {}
     for name in GATE_QUERIES:
-        runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            cat[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - start)
-        results[name] = round(min(runs), 3)
+        build = functools.partial(cat[name].build, spark, sf_dir)
+        results[name] = round(min(time_noop(build) for _ in range(3)), 3)
         print(f"{name:<26} {results[name]:7.3f} s", flush=True)
 
     if update:
         with open(floors_path, "w") as f:
             json.dump(
-                {"load_avg": round(load, 2), "floors": results}, f, indent=1
+                {"load_avg": load, "floors": results}, f, indent=1
             )
         print(f"floors rewritten -> {floors_path} (load {load:.2f})")
         return 0

@@ -17,20 +17,29 @@ bucket skew, natural group-size spreads), these ratios blow up; ~1x
 ratios certify the recorded alphas transfer to organic data.
 
 Usage: python tools/bench_organic.py [organic_dir] [--out BENCH_scale.json]
+
+Warm-up and noop-sink timing are tools/harness.py's; the result is
+written as the ``sf1_organic`` section, every other section untouched.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pw_etl_scrumptious_squad_spark import catalog as catmod  # noqa: E402
 from pw_etl_scrumptious_squad_spark.session import get_spark  # noqa: E402
-from pw_etl_scrumptious_squad_spark.sources.parquet import read_table  # noqa: E402
+from tools.harness import (  # noqa: E402
+    load_avg,
+    load_json,
+    time_noop,
+    update_json_section,
+    warm_up,
+)
 
 
 def main() -> None:
@@ -41,25 +50,16 @@ def main() -> None:
     out_path = (
         args[args.index("--out") + 1] if "--out" in args else "BENCH_scale.json"
     )
-    with open(out_path) as f:
-        payload = json.load(f)
-    curves = payload["queries"]
+    prior = load_json(out_path)
+    curves = prior.get("queries")
+    if not curves:
+        sys.exit(f"{out_path} holds no scaling curves: run tools/bench_scale.py")
 
     spark = get_spark(app_name="bench-organic")
     spark.sparkContext.setLogLevel("ERROR")
     cat = catmod.catalog()
     names = sorted(n for n in curves if n in cat)
-
-    # warm-up: JVM + parquet footers + Python workers
-    n_workers = spark.sparkContext.defaultParallelism
-    spark.range(n_workers).repartition(n_workers).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        read_table(spark, organic, t).count()
+    warm_up(spark, organic)
 
     results: dict[str, dict] = {}
     for name in names:
@@ -69,14 +69,9 @@ def main() -> None:
         # min-of-N protocol discards. Round-9 change: the single-run
         # protocol was silently charging one-time preps to the organic
         # point (y83 measured its 6M-row layout WRITE, 14.8x the read).
-        cat[name].build(spark, organic).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        start = time.perf_counter()
-        cat[name].build(spark, organic).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        t_org = round(time.perf_counter() - start, 3)
+        build = functools.partial(cat[name].build, spark, organic)
+        time_noop(build)
+        t_org = round(time_noop(build), 3)
         c = curves[name]
         pred = round(c["t1"] * (10.0 ** c["alpha_1_10"]), 3)
         results[name] = {
@@ -88,15 +83,11 @@ def main() -> None:
         }
         print(name, results[name])
 
-    try:
-        load = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover
-        load = None
     # keep hand-written per-query adjudications across re-measures
-    prior_annotations = payload.get("sf1_organic", {}).get("annotations")
-    payload["sf1_organic"] = {
+    prior_annotations = prior.get("sf1_organic", {}).get("annotations")
+    section = {
         "dir": organic,
-        "load_avg": load,
+        "load_avg": load_avg(),
         "n_queries": len(results),
         "queries": results,
         **({"annotations": prior_annotations} if prior_annotations else {}),
@@ -104,12 +95,11 @@ def main() -> None:
             "warm-then-timed per query (round 9): an untimed warm pass"
             " absorbs memoized hoists + codegen, matching bench.py's"
             " min-of-N discard; copy-point comparisons"
-            " carry the usual shared-host noise band (see bench.py"
-            " measurement protocol)"
+            " carry the usual shared-host noise band (see the"
+            " measurement protocol in tools/harness.py)"
         ),
     }
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
+    update_json_section(out_path, "sf1_organic", section)
     worst = sorted(
         results.items(), key=lambda kv: -(kv[1]["ratio_vs_copies"] or 0)
     )[:5]

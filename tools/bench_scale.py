@@ -8,12 +8,16 @@ Usage:  python tools/bench_scale.py [--sizes 1,10,100] [--out BENCH_scale.json]
         [--only name1,name2] [--merge]
 
 ``--only`` restricts the battery to the named entries; ``--merge`` folds
-the measured results into an existing ``--out`` file (re-measuring a
-flagged or contention-suspect entry without the full 1.5 h suite).
+the measured results into the existing curves of ``--out`` (re-measuring
+a flagged or contention-suspect entry without the full 1.5 h suite);
+without it the curves are replaced. Either way only this tool's sections
+are written: the ``streaming``, ``sf1_organic`` and ``cores_scaling``
+sections other tools record in the same file are left as they are.
 
-For each query and size the job runs twice (the min reports steady-state
-plan cost, discarding first-run codegen); execution is forced with a
-noop-format write. The scaling exponent between consecutive sizes is
+For each query and size the job runs twice after tools/harness.py's
+warm-up and is timed by its ``time_noop`` (build plus noop-sink write);
+the min reports steady-state plan cost, discarding first-run codegen.
+The scaling exponent between consecutive sizes is
 ``alpha = log(t_b/t_a) / log(b/a)``:
 
 - alpha <= ~1.1  -> linear (ideal: data grew 10x, time grew 10x)
@@ -33,11 +37,11 @@ exact tiers the small-sf catalog pins for oracle checking.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -58,6 +62,7 @@ from pw_etl_scrumptious_squad_spark.operators import (
 )
 from pw_etl_scrumptious_squad_spark.session import get_spark
 from pw_etl_scrumptious_squad_spark.sources.parquet import read_table
+from tools.harness import load_json, time_noop, update_json_section, warm_up
 
 # catalog entries that already express the 100 TB shape (map-side /
 # one-shuffle / broadcast-dim queries) — timed as-is over the scaled dirs
@@ -715,13 +720,21 @@ def operator_queries(spark, d: str, n_docs: int, n_vecs: int, cents):
     }
 
 
-def time_noop(thunk) -> float:
-    """Time BUILD + EXECUTE: several pipelines materialize eagerly while
-    the frame is being built (checkpoint rounds, collected fingerprints),
-    so timing only the final write would miss most of their work."""
-    start = time.perf_counter()
-    thunk().write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - start
+def scaling_curve(points: dict) -> dict:
+    """``points`` with its exponents recomputed from its ``t<k>`` times:
+    ``alpha_a_b`` between each pair of consecutive measured sizes, and
+    ``flag`` when alpha_10_100 > 1.3 (see the module docstring). Other
+    keys, such as a hand-written ``note``, are kept."""
+    out = {
+        k: v for k, v in points.items() if not k.startswith("alpha_") and k != "flag"
+    }
+    sizes = sorted(int(k[1:]) for k in out if k[0] == "t" and k[1:].isdigit())
+    for a, b in zip(sizes, sizes[1:]):
+        ta, tb = out[f"t{a}"], out[f"t{b}"]
+        if ta and tb and ta > 0:
+            out[f"alpha_{a}_{b}"] = round(math.log(tb / ta) / math.log(b / a), 3)
+    out["flag"] = out.get("alpha_10_100", 0) > 1.3
+    return out
 
 
 def main() -> None:
@@ -739,6 +752,7 @@ def main() -> None:
     base = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", os.path.join(ROOT, "scale_data")
     )
+    prior = load_json(out_path)
 
     spark = get_spark(app_name="bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
@@ -757,15 +771,15 @@ def main() -> None:
     meta: dict[str, dict] = {}
     for k in sizes:
         d = f"{base}/x{k}"
-        # warm the footers + JVM; record table sizes once per size
-        counts = {}
-        for t in ("documents", "embeddings", "events", "lineitem"):
-            counts[t] = read_table(spark, d, t).count()
-        meta[f"x{k}"] = counts
+        # warm-up once per size; record the sizes of the scaled tables
+        counts = warm_up(spark, d)
+        meta[f"x{k}"] = {
+            t: counts[t] for t in ("documents", "embeddings", "events", "lineitem")
+        }
         n_docs, n_vecs = counts["documents"], counts["embeddings"]
 
         batt: dict[str, object] = {
-            name: (lambda name=name, d=d: cat[name].build(spark, d))
+            name: functools.partial(cat[name].build, spark, d)
             for name in CATALOG_QUERIES
         }
         batt.update(operator_queries(spark, d, n_docs, n_vecs, cents))
@@ -775,80 +789,32 @@ def main() -> None:
                 continue
             if k > MAX_SIZE.get(name, 10**9):
                 continue
-            runs = [time_noop(thunk) for _ in range(2)]
-            t = round(min(runs), 3)
+            t = round(min(time_noop(thunk) for _ in range(2)), 3)
             results.setdefault(name, {})[f"t{k}"] = t
             print(f"x{k:<4} {name:<28} {t:8.3f} s", flush=True)
 
-    # scaling exponents between consecutive measured sizes
-    for name, r in results.items():
-        for a, b in zip(sizes, sizes[1:]):
-            ta, tb = r.get(f"t{a}"), r.get(f"t{b}")
-            if ta and tb and ta > 0:
-                r[f"alpha_{a}_{b}"] = round(
-                    math.log(tb / ta) / math.log(b / a), 3
-                )
-        if len(sizes) >= 2:
-            last = f"alpha_{sizes[-2]}_{sizes[-1]}"
-            r["flag"] = bool(r.get(last, 0) and r[last] > 1.3)
-        else:
-            r["flag"] = False
-
-    if merge and os.path.exists(out_path):
-        with open(out_path) as f:
-            prior = json.load(f)
-        merged = prior.get("queries", {})
-        for name, r in results.items():
-            # per-query deep merge: a --sizes-restricted re-measure must
-            # keep the other sizes' points, then alphas recompute over
-            # the merged series
-            old = merged.get(name, {})
-            merged[name] = {
-                **{k: v for k, v in old.items() if k.startswith("t")},
-                **{k: v for k, v in r.items() if k.startswith("t")},
-            }
-            q = merged[name]
-            for a, bsz in [(1, 10), (10, 100)]:
-                ta, tb = q.get(f"t{a}"), q.get(f"t{bsz}")
-                if ta and tb and ta > 0:
-                    q[f"alpha_{a}_{bsz}"] = round(
-                        math.log(tb / ta) / math.log(bsz / a), 3
-                    )
-            q["flag"] = bool(
-                q.get("alpha_10_100", 0) and q["alpha_10_100"] > 1.3
-            )
-        results = merged
+    measured = list(results)
+    if merge:
+        # a --sizes-restricted re-measure keeps the other sizes' points
+        old = prior.get("queries", {})
+        results = {
+            **old,
+            **{name: {**old.get(name, {}), **r} for name, r in results.items()},
+        }
         meta = {**prior.get("sizes", {}), **meta}
-    # preserve the streaming throughput record (tools/bench_stream.py)
-    # and the organic-sf1 validation section (tools/bench_organic.py)
-    # across any rewrite of this file, merged or full
-    streaming_prior = {}
-    organic_prior = {}
-    if os.path.exists(out_path):
-        try:
-            with open(out_path) as f:
-                _prior = json.load(f)
-            streaming_prior = _prior.get("streaming", {})
-            organic_prior = _prior.get("sf1_organic", {})
-        except Exception:  # noqa: BLE001 - corrupt prior: start fresh
-            streaming_prior = {}
-            organic_prior = {}
+    for name in measured:
+        results[name] = scaling_curve(results[name])
+
     payload = {
         "metric": "scaling_curves",
         "unit": "sec",
         "sizes": meta,
         "queries": results,
-        "flagged": sorted(
-            n for n, r in results.items() if r.get("flag")
-        ),
+        "flagged": sorted(n for n, r in results.items() if r.get("flag")),
         "excluded": EXCLUDED,
     }
-    if streaming_prior:
-        payload["streaming"] = streaming_prior
-    if organic_prior:
-        payload["sf1_organic"] = organic_prior
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
+    for key, value in payload.items():
+        update_json_section(out_path, key, value)
     print(json.dumps({k: v for k, v in payload.items() if k != "sizes"}))
 
 

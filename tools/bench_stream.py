@@ -23,6 +23,9 @@ nothing about sustained rate (round-7 verdict "What's wrong" #2). Round
 Usage: ``python tools/bench_stream.py [--batches 10] [--copies 20]
 [--rate-rps 20000] [--rate-secs 20] [--out BENCH_scale.json]``
 (sf dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1).
+The points are merged into the ``streaming`` section through
+tools/harness.py's ``update_json_section``; every other section of the
+file is left as it was, and a missing file is created.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pw_etl_scrumptious_squad_spark.session import get_spark  # noqa: E402
 from pw_etl_scrumptious_squad_spark.sources.parquet import read_table  # noqa: E402
 from pw_etl_scrumptious_squad_spark.streaming import pipeline as sp  # noqa: E402
+from tools.harness import load_json, update_json_section  # noqa: E402
 
 
 def _du(path: str) -> int:
@@ -96,6 +100,7 @@ def main() -> None:
         args[args.index("--out") + 1] if "--out" in args else "BENCH_scale.json"
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    prior = load_json(out_path).get("streaming", {})
 
     spark = get_spark(app_name="bench-stream")
     spark.sparkContext.setLogLevel("ERROR")
@@ -296,13 +301,7 @@ def main() -> None:
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    payload = {}
-    if os.path.exists(out_path):
-        with open(out_path) as f:
-            payload = json.load(f)
-    payload.setdefault("streaming", {}).update(streaming)
-    with open(out_path, "w") as f:
-        json.dump(payload, f, indent=1)
+    update_json_section(out_path, "streaming", {**prior, **streaming})
     print(json.dumps({"streaming": streaming}))
 
 
