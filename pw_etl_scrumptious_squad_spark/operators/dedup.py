@@ -1435,6 +1435,12 @@ def embedding_neardup_pairs(
     greater-than-everything). Mixed-width vectors never pair in either
     tier (``zip_with`` NULL-pads, so the fold is NULL), which the
     candidate stage mirrors by grouping on the vector width.
+
+    The vectorized tier runs a pandas UDF, so it needs pandas, numpy and
+    pyarrow on the executors (Spark's own requirements for Arrow UDFs);
+    ``'auto'`` does not probe for them. On executors without them, pass
+    ``impl='expr'``: the JVM-only exact tier, same output. (The cell
+    route above ``max_exact_rows`` is pandas-based whatever ``impl``.)
     """
     if impl not in ("auto", "vectorized", "expr"):
         raise ValueError(f"impl must be auto|vectorized|expr, got {impl!r}")
@@ -1618,14 +1624,17 @@ def _embedding_neardup_exact_vectorized(
     the work spreads over chunk PAIRS, not blocks — a single huge block
     cannot serialize the stage); every (block, width, chunk-pair) group
     computes its raw cosine matrix with one BLAS matmul and emits only
-    the (doc_a, doc_b) ids whose raw dot clears ``threshold - 1e-6``
-    (or is NaN — Spark's NaN-is-greatest comparator semantics). The
+    the distinct (block, width, doc_a < doc_b) keys whose raw dot clears
+    ``threshold - 1e-6`` (or is NaN — Spark's NaN-is-greatest comparator
+    semantics); rows that share a ``doc_id`` never pair, as in the expr
+    tier. The
     margin is loose by ~1e-6 while fold-vs-BLAS summation differs by
     ~1 ulp, so no qualifying pair can be missed; false candidates are
     dropped by the exact filter below.
 
-    Stage 2 — values: the surviving pairs (output-sized, not
-    pair-count-sized) join their unit vectors back and the emitted
+    Stage 2 — values: the surviving keys (output-sized, not
+    pair-count-sized) join their unit vectors back on (block, width,
+    id), so duplicate ids yield the expr tier's row pairs, and the emitted
     ``cosine_sim`` is the SAME ``round(aggregate(zip_with(...)), 6)``
     expression the expr tier (and the DuckDB oracle's structural twin)
     evaluates — bit-identical outputs by construction.
@@ -1638,7 +1647,10 @@ def _embedding_neardup_exact_vectorized(
 
     spark = unit.sparkSession
     n_chunks = max(1, min(64, math.ceil(max(n_rows, 1) / 1024)))
-    side = unit.select(
+    # a NULL block or id pairs with nothing in the expr tier's join
+    side = unit.where(
+        F.col("blk").isNotNull() & F.col("doc_id").isNotNull()
+    ).select(
         "doc_id",
         "blk",
         "uv",
@@ -1666,46 +1678,56 @@ def _embedding_neardup_exact_vectorized(
         import numpy as np
         import pandas as pd
 
-        if len(pdf) == 0 or pdf["__w"].iloc[0] == 0:
-            return pd.DataFrame({"doc_a": [], "doc_b": []}).astype("int64")
+        def _pairs(xa, xb):
+            # rows that share a doc_id hash to the same chunk, so only the
+            # diagonal can pair them: drop those (the expr tier's strict
+            # a.doc_id < b.doc_id) and emit each id pair once — the join
+            # back below re-expands it to every row pair of the two ids
+            pairs = pd.DataFrame(
+                {"doc_a": np.minimum(xa, xb), "doc_b": np.maximum(xa, xb)},
+                dtype="int64",
+            )
+            pairs = pairs[pairs["doc_a"] != pairs["doc_b"]].drop_duplicates()
+            return pairs.assign(blk=pdf["blk"].iloc[0], __w=pdf["__w"].iloc[0])
+
+        if pdf["__w"].iloc[0] == 0:
+            return _pairs([], [])
         if int(pdf["ci"].iloc[0]) == int(pdf["cj"].iloc[0]):
-            pdf = pdf.sort_values("doc_id")
             ids = pdf["doc_id"].to_numpy()
             m = np.stack(pdf["uv"].to_numpy())
             s = m @ m.T
             iu, ju = np.triu_indices(len(ids), k=1)
             sv = s[iu, ju]
             keep = (sv >= lo) | np.isnan(sv)
-            return pd.DataFrame(
-                {"doc_a": ids[iu[keep]], "doc_b": ids[ju[keep]]}
-            )
+            return _pairs(ids[iu[keep]], ids[ju[keep]])
         a = pdf[pdf["__s"] == 0]
         b = pdf[pdf["__s"] == 1]
         if len(a) == 0 or len(b) == 0:
-            return pd.DataFrame({"doc_a": [], "doc_b": []}).astype("int64")
+            return _pairs([], [])
         ia = a["doc_id"].to_numpy()
         ib = b["doc_id"].to_numpy()
         s = np.stack(a["uv"].to_numpy()) @ np.stack(b["uv"].to_numpy()).T
         keep = (s >= lo) | np.isnan(s)
         ii, jj = np.nonzero(keep)
-        xa, xb = ia[ii], ib[jj]
-        return pd.DataFrame(
-            {"doc_a": np.minimum(xa, xb), "doc_b": np.maximum(xa, xb)}
-        )
+        return _pairs(ia[ii], ib[jj])
 
     cands = tagged.groupBy("blk", "__w", "ci", "cj").applyInPandas(
         _cands, T.StructType(
             [
                 T.StructField("doc_a", T.LongType()),
                 T.StructField("doc_b", T.LongType()),
+                side.schema["blk"],
+                side.schema["__w"],
             ]
         )
     )
-    ua = unit.select(
-        F.col("doc_id").alias("doc_a"), F.col("uv").alias("uv_a")
+    # (block, width, id) keys the join back: a pair is scored for every
+    # row pair of its two ids within its block, as in the expr tier
+    ua = side.select(
+        "blk", "__w", F.col("doc_id").alias("doc_a"), F.col("uv").alias("uv_a")
     )
-    ub = unit.select(
-        F.col("doc_id").alias("doc_b"), F.col("uv").alias("uv_b")
+    ub = side.select(
+        "blk", "__w", F.col("doc_id").alias("doc_b"), F.col("uv").alias("uv_b")
     )
     cos = F.round(
         F.aggregate(
@@ -1717,8 +1739,8 @@ def _embedding_neardup_exact_vectorized(
     )
     id_type = unit.schema["doc_id"].dataType
     return (
-        cands.join(F.broadcast(ua), "doc_a")
-        .join(F.broadcast(ub), "doc_b")
+        cands.join(F.broadcast(ua), ["blk", "__w", "doc_a"])
+        .join(F.broadcast(ub), ["blk", "__w", "doc_b"])
         .select(
             F.col("doc_a").cast(id_type).alias("doc_a"),
             F.col("doc_b").cast(id_type).alias("doc_b"),

@@ -45,6 +45,13 @@ def read_table(
     returning False — callers that need an existence probe use
     :func:`table_exists`.
     """
+    return _read_parquet_normalized(
+        spark, _resolved_path(base_dir, name), name, schema
+    )
+
+
+def _resolved_path(base_dir: str, name: str) -> str:
+    """The path :func:`read_table` scans for ``name``."""
     path = table_path(base_dir, name)
     # Round-8 snapshot isolation: a table written through the versioned
     # mutating path (upsert_table/compact_table) keeps its data in
@@ -57,7 +64,20 @@ def read_table(
         _, data_path = _resolve_snapshot(base_dir, name)
         if data_path is not None:
             path = data_path
-    return _read_parquet_normalized(spark, path, name, schema)
+    return path
+
+
+def table_signature(base_dir: str, name: str) -> tuple | None:
+    """``(path, stat signature)`` of the files :func:`read_table` would
+    scan for ``name`` right now — the signature :data:`_PLAN_MEMO`
+    trusts, so any rewrite, append or delete of the table changes it.
+    ``None`` for a missing table or a schemed (``s3a://``, ``file://``)
+    path, which has no local stat."""
+    path = _resolved_path(base_dir, name)
+    if "://" in path:
+        return None
+    sig = _stat_signature(path)
+    return None if sig is None else (path, sig)
 
 
 # Analyzed-plan memo for repeated reads of the SAME immutable file set:

@@ -152,3 +152,46 @@ def test_degenerate_embeddings_oracle_parity(spark, degenerate_sf, name):
             else "row sets differ in tails"
         )
         raise AssertionError(f"{name}: value-hash mismatch\n{detail}")
+
+
+def test_neardup_duplicate_ids_vectorized_matches_expr(spark):
+    """Rows that share a vec_id, within one label and across labels,
+    routed by ``auto`` to the vectorized exact tier: it must emit the
+    expr tier's rows exactly — no (x, x) self-pair from two copies of one
+    id, one row per row pair of two ids in the same label, and nothing
+    for NULL labels (the expr tier's label equality never matches NULL)."""
+    from pw_etl_scrumptious_squad_spark.operators import dedup
+
+    rows = [
+        (1, 0, _vec((0, 1.0))),
+        (1, 0, _vec((0, 1.0))),               # exact duplicate row
+        (1, 0, _vec((0, 0.9), (1, 0.1))),     # same id, other vector
+        (2, 0, _vec((0, 1.0))),
+        (2, 1, _vec((0, 1.0))),               # id 2 again, other label
+        (3, 1, _vec((0, 0.95), (1, 0.05))),
+        (1, 1, _vec((0, 1.0))),
+        (4, None, _vec((2, 1.0))),            # NULL label
+        (5, None, _vec((2, 1.0))),
+        (5, None, _vec((2, 1.0))),
+    ]
+    # spread the ids over several hash chunks, some duplicated
+    rows += [
+        (10 + i % 40, i % 2, _vec((i % DIM, 1.0), ((i + 1) % DIM, 0.5)))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id LONG, label LONG, embedding ARRAY<FLOAT>"
+    )
+    hint = dedup._VEC_EXACT_MIN_ROWS + 1
+    v = dedup.embedding_neardup_pairs(
+        df, "vec_id", "embedding", "label", 0.3, n_rows_hint=hint
+    )
+    e = dedup.embedding_neardup_pairs(
+        df, "vec_id", "embedding", "label", 0.3, n_rows_hint=hint, impl="expr"
+    )
+    assert "FlatMapGroupsInPandas" in v._jdf.queryExecution().executedPlan().toString()
+    got = sorted(map(tuple, v.collect()))
+    assert got == sorted(map(tuple, e.collect()))
+    assert all(a < b for a, b, _ in got)
+    assert got.count((1, 2, 1.0)) == 3  # both labels' copies of 1 meet 2
+    assert not [p for p in got if {p[0], p[1]} & {4, 5}]

@@ -9,14 +9,20 @@ from pw_etl_scrumptious_squad_spark.schemas import STAR_COLUMNS
 from pw_etl_scrumptious_squad_spark.sources import parquet as lake
 
 
-def test_run_batch_etl(spark, totesys, tmp_path):
-    source = str(tmp_path / "oltp")
+@pytest.fixture(scope="module")
+def oltp_lake(totesys, tmp_path_factory) -> str:
+    """The totesys seed as a parquet source lake; tests only read it."""
+    source = str(tmp_path_factory.mktemp("oltp"))
+    for name, df in totesys.items():
+        lake.write_table(df, source, name)
+    return source
+
+
+def test_run_batch_etl(spark, oltp_lake, tmp_path):
+    source = oltp_lake
     staging = str(tmp_path / "staging")
     warehouse = str(tmp_path / "warehouse")
     state = str(tmp_path / "state.parquet")
-    for name, df in totesys.items():
-        lake.write_table(df, source, name)
-
     star = etl.run_batch_etl(spark, source, staging, warehouse, state)
     assert sorted(star) == sorted(STAR_COLUMNS)
 
@@ -31,10 +37,126 @@ def test_run_batch_etl(spark, totesys, tmp_path):
     dim = lake.read_table(spark, warehouse, "dim_staff")
     assert [r["staff_id"] for r in dim.orderBy("staff_id").collect()] == [1, 2, 3]
 
-    # second cycle: no new OLTP rows -> extract stages nothing new, transforms
-    # still rebuild dims (the reference re-pushes full dims each run)
+    # second extract: no new OLTP rows -> nothing staged (which star tables
+    # a cycle rewrites is pinned by the test_refresh_* tests below)
     deltas = etl.extract(spark, source, staging, state)
     assert deltas == {}
+
+
+def test_star_builders_declare_every_input(spark, totesys, oltp_lake):
+    """The refresh rule trusts STAR_BUILDERS' input lists: each star
+    table built by transform must scan exactly the files of its declared
+    OLTP inputs, and dim_date none. A builder that starts reading an
+    undeclared table fails here instead of leaving its warehouse table
+    stale."""
+    tables = {name: lake.read_table(spark, oltp_lake, name) for name in totesys}
+    star = etl.transform(tables, spark)
+    assert sorted(star) == sorted(STAR_COLUMNS) == sorted(etl.STAR_BUILDERS)
+    assert etl.STAR_BUILDERS["dim_date"][0] == ()
+    for name, (inputs, _) in etl.STAR_BUILDERS.items():
+        declared = {f for t in inputs for f in tables[t].inputFiles()}
+        assert set(star[name].inputFiles()) == declared, name
+
+
+# A three-source slice of the star keeps the refresh tests cheap: address
+# feeds two dims, counterparty one of them, payment the fact.
+REFRESH_STAR = ("dim_date", "dim_location", "dim_counterparty", "fact_payment")
+
+
+@pytest.fixture
+def refresh(spark, totesys, tmp_path, monkeypatch):
+    """Lakes for the REFRESH_STAR slice, and ``cycle(**kw)``: one
+    run_batch_etl cycle returning the sorted names of the warehouse
+    tables it wrote. A name put in ``fail`` makes its warehouse write
+    raise."""
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(
+        etl, "STAR_BUILDERS", {k: etl.STAR_BUILDERS[k] for k in REFRESH_STAR}
+    )
+    env = SimpleNamespace(
+        **{d: str(tmp_path / d) for d in ("source", "staging", "warehouse", "state")},
+        fail=set(),
+    )
+    for name in ("address", "counterparty", "payment"):
+        lake.write_table(totesys[name], env.source, name)
+    written: list[str] = []
+    real_write = lake.write_table
+
+    def counting_write(df, base_dir, name, *args, **kwargs):
+        if base_dir == env.warehouse:
+            if name in env.fail:
+                raise OSError(f"warehouse write of {name} failed")
+            written.append(name)
+        return real_write(df, base_dir, name, *args, **kwargs)
+
+    def cycle(**kwargs) -> list[str]:
+        written.clear()
+        etl.run_batch_etl(
+            spark, env.source, env.staging, env.warehouse, env.state, **kwargs
+        )
+        return sorted(written)
+
+    monkeypatch.setattr(lake, "write_table", counting_write)
+    env.cycle = cycle
+    env.write_source = real_write
+    return env
+
+
+def test_refresh_rewrites_only_what_changed(spark, totesys, refresh):
+    import shutil
+
+    assert refresh.cycle() == sorted(REFRESH_STAR)  # fresh warehouse
+    assert refresh.cycle() == []  # nothing changed
+
+    # one changed source: exactly its dependents
+    cp = totesys["counterparty"]
+    refresh.write_source(cp.filter("counterparty_id < 4"), refresh.source, "counterparty")
+    assert refresh.cycle() == ["dim_counterparty"]
+
+    # a hard delete without any timestamp bump still reaches the dims
+    address = totesys["address"].filter("address_id != 5")
+    refresh.write_source(address, refresh.source, "address")
+    assert refresh.cycle() == ["dim_counterparty", "dim_location"]
+    dim = lake.read_table(spark, refresh.warehouse, "dim_location")
+    assert sorted(r["location_id"] for r in dim.collect()) == [1, 2, 3, 4]
+
+    # a warehouse table removed by hand is rewritten
+    shutil.rmtree(lake.table_path(refresh.warehouse, "dim_location"))
+    assert refresh.cycle() == ["dim_location"]
+    assert lake.read_table(spark, refresh.warehouse, "dim_location").count() == 4
+
+
+def test_refresh_retries_a_failed_load_in_full(spark, totesys, refresh):
+    refresh.cycle()
+    refresh.write_source(
+        totesys["address"].filter("address_id != 5"), refresh.source, "address"
+    )
+    refresh.write_source(
+        totesys["payment"].filter("payment_id != 1"), refresh.source, "payment"
+    )
+    refresh.fail = {"fact_payment"}
+    with pytest.raises(OSError, match="fact_payment"):
+        refresh.cycle()
+    refresh.fail = set()
+    # every table that load was given is written again, whether or not
+    # its own write had gone through
+    assert refresh.cycle() == ["dim_counterparty", "dim_location", "fact_payment"]
+    assert refresh.cycle() == []
+    fact = lake.read_table(spark, refresh.warehouse, "fact_payment")
+    assert 1 not in {r["payment_id"] for r in fact.collect()}
+
+
+def test_refresh_alert_cycle_writes_fact_payment(refresh):
+    """The alert counters ride the fact_payment write, so an alerting
+    cycle writes it even when payment is unchanged."""
+    from pw_etl_scrumptious_squad_spark.alerts import AlertManager, Threshold
+
+    refresh.cycle()
+    fired = []
+    mgr = AlertManager([Threshold("n_rows", ">", 0)], sink=fired.append)
+    assert refresh.cycle(alert_manager=mgr) == ["fact_payment"]
+    assert [a.metric for a in fired] == ["n_rows"]
 
 
 def test_failed_staging_write_keeps_watermarks(spark, totesys, tmp_path, monkeypatch):
