@@ -871,8 +871,6 @@ def semdedup_prune(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_id: str = "centroid_id",
-    max_exact_rows: int = 100_000,
-    n_rows_hint: int | None = None,
     impl: str = "auto",
 ) -> DataFrame:
     """SemDeDup cluster-then-prune (Abbas et al. 2023): assign every
@@ -901,30 +899,21 @@ def semdedup_prune(
     assignment/priority compare those integers — bit-identical
     cross-engine, so the full prune decision is value-exact.
 
-    TIERS: the expression path above is the oracle-matched default. When
-    ``n_rows_hint`` (no-count contract: pass it to opt in; a wrong hint
-    degrades performance, never values) exceeds ``max_exact_rows``, the
-    same decisions are computed by :func:`_semdedup_prune_matmul` — one
-    int64 numpy matmul per Arrow batch (assignment) / per cell group
-    (pairs) instead of per-pair expression folds. Every intermediate is
-    either an exact int64 or the identical IEEE double expression, so
-    the two routes return the SAME rows (asserted by the parity test).
-
     ``impl``: ``'vectorized'`` (the default under ``'auto'`` — round
     10: measured 4.5x at the y48 shape, 2k vectors x 512 centroids,
     because the expression tier's per-pair interpreted ``aggregate``/
     ``zip_with`` folds pay ~us per element while the matmul batches
-    whole cells) routes straight to the matmul tier; ``'expr'`` pins
-    the expression path, which remains the DuckDB oracle's structural
-    twin and the parity test's reference.
+    whole cells) computes the same decisions in
+    :func:`_semdedup_prune_matmul` — one int64 numpy matmul per Arrow
+    batch (assignment) / per cell group (pairs). Every intermediate is
+    either an exact int64 or the identical IEEE double expression, so
+    both tiers return the SAME rows (asserted by the parity test).
+    ``'expr'`` pins the expression path above, which remains the DuckDB
+    oracle's structural twin and the parity test's reference.
     """
     if impl not in ("auto", "expr", "vectorized"):
         raise ValueError(f"impl must be auto|expr|vectorized, got {impl!r}")
-    if impl != "expr" and (
-        impl == "vectorized"
-        or impl == "auto"
-        or (n_rows_hint is not None and n_rows_hint > max_exact_rows)
-    ):
+    if impl != "expr":
         return _semdedup_prune_matmul(
             corpus, centroids, threshold_ppb, id_col, vec_col, centroid_id
         )

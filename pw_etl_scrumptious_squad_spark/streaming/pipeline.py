@@ -768,6 +768,126 @@ def streaming_cardinality_monitor(
     )
 
 
+def _read_store(
+    spark: SparkSession,
+    store_dir: str,
+    table: str,
+    snapshot: int | None = None,
+) -> tuple[DataFrame, dict]:
+    """The ``(summary, meta row)`` pair a sketch store's warehouse
+    snapshot pins (``snapshot=None`` = latest); the marker is resolved
+    once, so the two always come from the same batch."""
+    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
+    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
+
+    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
+    meta = snapshot_read(
+        spark, store_dir, "meta", version=pinned["meta"]
+    ).first().asDict()
+    return snapshot_read(spark, store_dir, table, version=pinned[table]), meta
+
+
+def _sketch_store(
+    stream: DataFrame,
+    store_dir: str,
+    checkpoint_dir: str,
+    processing_time: str | None,
+    table: str,
+    summarize: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    params: dict[str, int],
+    total_col: str | None = None,
+    trim: Callable[[DataFrame], tuple[DataFrame, int]] | None = None,
+) -> StreamingQuery:
+    """The one store protocol of the streaming sketches below: fold each
+    micro-batch's mergeable summary into a persisted store whose size is
+    bounded by the sketch, never by the history.
+
+    Layout: the summary table ``table`` and a 1-row ``meta`` table of
+    BIGINT columns in this order: ``total`` (cumulative sum of the
+    summaries' ``total_col``, when given), ``dec`` (cumulative trimmed
+    amount, when ``trim`` is given), the sketch ``params``, and
+    ``last_bid``, the last applied batch id.
+
+    Per trigger:
+
+    1. ``summarize(batch)`` is materialized. An empty summary (its
+       ``total_col`` sums to 0, or it has no row) returns before the
+       store is touched.
+    2. The latest warehouse marker resolves the (summary, meta) pair.
+       foreachBatch is at-least-once: a batch replayed after its marker
+       committed (crash between the warehouse commit and the streaming
+       checkpoint commit) would merge twice, so the commit is keyed on
+       the batch id, and an incoming ``batch_id <= last_bid`` returns
+       untouched. A meta without ``last_bid`` (stores from before round
+       10) skips the guard, never a spurious skip.
+    3. ``merge`` re-aggregates the union of the stored summary and the
+       batch's (the first batch's summary is stored as is); ``trim``
+       then bounds the result and returns the amount it subtracted.
+    4. Publish: the summary and the meta row each write a versioned
+       snapshot, and one warehouse marker CAS-pins the pair. Readers
+       (:func:`_read_store`) never see a total from one batch against
+       a summary from another; a batch that fails before its marker
+       publishes data dirs but no marker, and its retry commits once.
+
+    Before the stream starts, a store built with other ``params``
+    raises ValueError and is left untouched: sketches of a different
+    shape do not merge, and folding into one would break its
+    guarantee."""
+    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
+    from pw_etl_scrumptious_squad_spark.sources.parquet import (
+        write_table_snapshot,
+    )
+
+    spark = stream.sparkSession
+    params = {name: int(v) for name, v in params.items()}
+    if params and W.warehouse_version(store_dir, spark) > 0:
+        meta = _read_store(spark, store_dir, table)[1]
+        stored = {name: meta.get(name) for name in params}
+        if stored != params:
+            raise ValueError(
+                f"sketch store {store_dir} holds {stored}, not {params}"
+            )
+
+    def batch_fn(batch: DataFrame, batch_id: int) -> None:
+        delta = summarize(batch).transform(materialize)
+        if total_col is None:
+            added = delta.limit(1).count()  # only emptiness is needed
+        else:
+            added = int(
+                delta.agg(F.coalesce(F.sum(total_col), F.lit(0))).first()[0]
+            )
+        if added == 0:
+            return
+        merged, meta = delta, {}
+        version = W.warehouse_version(store_dir, spark)
+        if version > 0:
+            prior, meta = _read_store(spark, store_dir, table, version)
+            last_bid = meta.get("last_bid")
+            if last_bid is not None and int(batch_id) <= last_bid:
+                return
+            merged = merge(prior.unionByName(delta))
+        row = {}
+        if total_col is not None:
+            row["total"] = meta.get("total", 0) + added
+        if trim is not None:
+            merged, cut = trim(merged)
+            row["dec"] = meta.get("dec", 0) + cut
+        row.update(params, last_bid=int(batch_id))
+        meta_df = spark.createDataFrame(
+            [tuple(row.values())], ", ".join(f"{c} BIGINT" for c in row)
+        )
+        pinned = {
+            name: write_table_snapshot(df, store_dir, name)
+            for name, df in ((table, merged), ("meta", meta_df))
+        }
+        W.commit_warehouse_snapshot(store_dir, pinned, spark)
+
+    return run_foreach_batch(
+        stream, checkpoint_dir, batch_fn, processing_time=processing_time
+    )
+
+
 def streaming_heavy_hitters(
     texts_stream: DataFrame,
     store_dir: str,
@@ -780,32 +900,22 @@ def streaming_heavy_hitters(
     Misra-Gries summary of at most ``capacity`` token counters across
     micro-batches — the streaming half of
     ``text.heavy_hitters_exact``'s sketch-then-recount design, with the
-    same one-sided guarantee.
+    same one-sided guarantee. Store: ``mg`` + meta ``(total, dec,
+    last_bid)`` under the :func:`_sketch_store` protocol.
 
-    Per trigger (all JVM built-ins, one bounded-store rewrite):
-
-    1. Exact batch token counts (explode + map-side-combined groupBy).
-    2. Merge with the persisted summary (union + sum — the summary is
-       <= capacity rows, the batch vocabulary is batch-bounded).
-    3. If the merge exceeds ``capacity``: subtract the (capacity+1)-th
-       largest merged count from EVERY counter and drop the non-positive
-       rest — the mergeable-summaries trim (Agarwal et al.), which
-       preserves the invariant that any token's true delivered count
-       exceeds its counter by at most the cumulative trimmed amount D,
-       and D <= total/(capacity+1). The trim value is a count (not a
-       token pick), so ties cannot make the store partition-dependent.
-    4. Publish: the summary and a 1-row meta table (cumulative token
-       total, cumulative D, last applied batch id) each write a
-       versioned snapshot, one warehouse marker CAS-pins the pair —
-       readers never see a total from one batch against counters from
-       another, and a crashed batch publishes data dirs but no marker.
-       Unlike the CC store (whose merge is naturally idempotent),
-       re-merging the same counts is NOT — foreachBatch is
-       at-least-once, so a batch replayed after its marker committed
-       (crash between warehouse commit and streaming-checkpoint
-       commit) would double-count. The meta row's ``last_bid`` makes
-       the commit idempotent: an incoming ``batch_id <= last_bid``
-       returns without touching the store.
+    Merge law: exact batch token counts (explode + map-side-combined
+    groupBy) union + re-sum with the persisted summary (<= capacity
+    rows; the batch vocabulary is batch-bounded). If the merge exceeds
+    ``capacity``: subtract the (capacity+1)-th largest merged count
+    from EVERY counter and drop the non-positive rest — the
+    mergeable-summaries trim (Agarwal et al.), which preserves the
+    invariant that any token's true delivered count exceeds its counter
+    by at most the cumulative trimmed amount D (``dec``), and D <=
+    total/(capacity+1). The trim value is a count (not a token pick),
+    so ties cannot make the store partition-dependent. Unlike the CC
+    store (whose merge is naturally idempotent), re-merging the same
+    counts is NOT, which is what the protocol's ``last_bid`` guard is
+    for.
 
     Guarantee read back by :func:`read_heavy_hitters`: every token with
     true frequency >= ceil(total/denom) is IN the summary whenever
@@ -814,78 +924,38 @@ def streaming_heavy_hitters(
     Final-state parity vs the batch operator is pinned in
     tests/test_streaming.py (recounting the summary's candidates over
     the full delivered corpus reproduces heavy_hitters_exact)."""
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import (
-        snapshot_read,
-        write_table_snapshot,
-    )
 
-    spark = texts_stream.sparkSession
+    def trim(merged: DataFrame) -> tuple[DataFrame, int]:
+        if merged.count() <= capacity:
+            return merged, 0
+        # the (capacity+1)-th largest count — a 1-row driver read over
+        # the bounded (summary + batch-vocab) table
+        v = int(
+            merged.orderBy(F.col("cnt").desc(), "token")
+            .offset(capacity)
+            .limit(1)
+            .first()["cnt"]
+        )
+        less = (F.col("cnt") - F.lit(v)).cast("bigint")
+        return merged.withColumn("cnt", less).filter(F.col("cnt") > 0), v
 
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        toks = (
+    return _sketch_store(
+        texts_stream, store_dir, checkpoint_dir, processing_time,
+        table="mg",
+        summarize=lambda batch: (
             batch.select(F.explode(F.split(text_col, " ")).alias("token"))
             .filter(F.col("token") != "")
-        )
-        counts = toks.groupBy("token").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt")
-        ).transform(materialize)
-        row = counts.agg(
-            F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("t")
-        ).first()
-        batch_total = int(row["t"])
-        if batch_total == 0:
-            return
-        if W.warehouse_version(store_dir, spark) > 0:
-            pinned = W.warehouse_snapshot_tables(store_dir, None, spark)
-            prior = snapshot_read(
-                spark, store_dir, "mg", version=pinned["mg"]
-            )
-            meta = snapshot_read(
-                spark, store_dir, "meta", version=pinned["meta"]
-            ).first().asDict()
-            # replay guard: at-least-once delivery can re-run a batch
-            # whose marker already committed — re-merging would
-            # double-count, so the commit is keyed on batch_id
-            # (pre-round-10 stores have no last_bid column: None skips
-            # the guard, never a spurious skip)
-            last_bid = meta.get("last_bid")
-            if last_bid is not None and int(batch_id) <= int(last_bid):
-                return
-            total, dec = int(meta["total"]) + batch_total, int(meta["dec"])
-            merged = (
-                prior.unionByName(counts)
-                .groupBy("token")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-                .transform(materialize)
-            )
-        else:
-            total, dec = batch_total, 0
-            merged = counts
-        n = merged.count()
-        if n > capacity:
-            # the (capacity+1)-th largest count — a 1-row driver read
-            # over the bounded (summary + batch-vocab) table
-            v = int(
-                merged.orderBy(F.col("cnt").desc(), "token")
-                .offset(capacity)
-                .limit(1)
-                .first()["cnt"]
-            )
-            merged = merged.withColumn(
-                "cnt", (F.col("cnt") - F.lit(v)).cast("bigint")
-            ).filter(F.col("cnt") > 0)
-            dec += v
-        mv = write_table_snapshot(merged, store_dir, "mg")
-        meta_df = spark.createDataFrame(
-            [(total, dec, int(batch_id))],
-            "total BIGINT, dec BIGINT, last_bid BIGINT",
-        )
-        tv = write_table_snapshot(meta_df, store_dir, "meta")
-        W.commit_warehouse_snapshot(store_dir, {"mg": mv, "meta": tv}, spark)
-
-    return run_foreach_batch(
-        texts_stream, checkpoint_dir, batch_fn, processing_time=processing_time
+            .groupBy("token")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        ),
+        merge=lambda both: (
+            both.groupBy("token")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            .transform(materialize)
+        ),
+        params={},
+        total_col="cnt",
+        trim=trim,
     )
 
 
@@ -903,21 +973,14 @@ def read_heavy_hitters(
     marks tokens whose LOWER bound already clears it. Exact counts, if
     needed, come from one recount pass over the corpus — the y82
     two-phase contract."""
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
-
-    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
-    mg = snapshot_read(spark, store_dir, "mg", version=pinned["mg"])
-    meta = snapshot_read(
-        spark, store_dir, "meta", version=pinned["meta"]
-    ).first()
-    total, dec = int(meta["total"]), int(meta["dec"])
-    thr = (total + denom - 1) // denom
+    mg, meta = _read_store(spark, store_dir, "mg", snapshot)
+    thr = (meta["total"] + denom - 1) // denom
+    cnt_max = (F.col("cnt") + F.lit(meta["dec"])).cast("bigint")
     return (
         mg.select(
             "token",
             F.col("cnt").alias("cnt_min"),
-            (F.col("cnt") + F.lit(dec)).cast("bigint").alias("cnt_max"),
+            cnt_max.alias("cnt_max"),
             F.lit(thr).cast("bigint").alias("threshold"),
             (F.col("cnt") >= F.lit(thr)).alias("guaranteed"),
         )
@@ -937,72 +1000,28 @@ def streaming_quantile_sketch(
     micro-batch's HDR-histogram bucket counts
     (operators/stats.py::quantile_sketch) into a persisted sketch store
     — the streaming twin of the batch sketch, made possible by the
-    sketch being EXACTLY mergeable (union + re-sum is associative), so
-    the landed store equals the batch sketch over everything delivered,
-    bit-for-bit, whatever the batch boundaries were.
-
-    Per trigger: one map-side-combined bucket hash-agg over the batch,
-    one union+re-sum with the <= 64 * 2^sub_bits-row persisted store,
-    one versioned snapshot publish; a warehouse marker CAS-pins the
-    (sketch, meta) pair. The commit is keyed on batch_id in the meta
-    row (the streaming_heavy_hitters convention): foreachBatch is
-    at-least-once and a re-merged replay would double every count, so
-    an incoming batch_id <= the stored one returns untouched.
+    sketch being EXACTLY mergeable (union + re-sum per bucket is
+    associative), so the landed store equals the batch sketch over
+    everything delivered, bit-for-bit, whatever the batch boundaries
+    were. Store: ``sketch`` (<= 64 * 2^sub_bits rows) + meta ``(total,
+    sub_bits, last_bid)`` under the :func:`_sketch_store` protocol; a
+    re-merged replay would double every count.
 
     Read back with :func:`read_sketch_quantiles` — any percentile at
     relative error < 2^(1-sub_bits), time-travelable by warehouse
     snapshot. The exact tier (stats.exact_quantiles) remains the
     oracle-checked batch companion (y85/c18)."""
     from pw_etl_scrumptious_squad_spark.operators import stats as S
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import (
-        snapshot_read,
-        write_table_snapshot,
-    )
 
-    spark = values_stream.sparkSession
-
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        counts = S.quantile_sketch(batch, value_col, sub_bits).transform(
-            materialize
-        )
-        row = counts.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("t")
-        ).first()
-        batch_total = int(row["t"])
-        if batch_total == 0:
-            return
-        if W.warehouse_version(store_dir, spark) > 0:
-            pinned = W.warehouse_snapshot_tables(store_dir, None, spark)
-            meta = snapshot_read(
-                spark, store_dir, "meta", version=pinned["meta"]
-            ).first().asDict()
-            last_bid = meta.get("last_bid")
-            if last_bid is not None and int(batch_id) <= int(last_bid):
-                return  # at-least-once replay of a committed batch
-            prior = snapshot_read(
-                spark, store_dir, "sketch", version=pinned["sketch"]
-            )
-            merged = (
-                prior.unionByName(counts)
-                .groupBy("rep")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-            total = int(meta["total"]) + batch_total
-        else:
-            merged, total = counts, batch_total
-        sv = write_table_snapshot(merged, store_dir, "sketch")
-        meta_df = spark.createDataFrame(
-            [(total, int(sub_bits), int(batch_id))],
-            "total BIGINT, sub_bits BIGINT, last_bid BIGINT",
-        )
-        tv = write_table_snapshot(meta_df, store_dir, "meta")
-        W.commit_warehouse_snapshot(
-            store_dir, {"sketch": sv, "meta": tv}, spark
-        )
-
-    return run_foreach_batch(
-        values_stream, checkpoint_dir, batch_fn, processing_time=processing_time
+    return _sketch_store(
+        values_stream, store_dir, checkpoint_dir, processing_time,
+        table="sketch",
+        summarize=lambda batch: S.quantile_sketch(batch, value_col, sub_bits),
+        merge=lambda both: both.groupBy("rep").agg(
+            F.sum("n").cast("bigint").alias("n")
+        ),
+        params={"sub_bits": sub_bits},
+        total_col="n",
     )
 
 
@@ -1018,19 +1037,9 @@ def read_sketch_quantiles(
     ``sketch_quantiles`` over everything delivered up to that
     snapshot."""
     from pw_etl_scrumptious_squad_spark.operators import stats as S
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
 
-    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
-    meta = snapshot_read(
-        spark, store_dir, "meta", version=pinned["meta"]
-    ).first()
-    sketch = snapshot_read(
-        spark, store_dir, "sketch", version=pinned["sketch"]
-    )
-    return S.sketch_quantiles(
-        sketch, percentiles, sub_bits=int(meta["sub_bits"])
-    )
+    sketch, meta = _read_store(spark, store_dir, "sketch", snapshot)
+    return S.sketch_quantiles(sketch, percentiles, sub_bits=meta["sub_bits"])
 
 
 def streaming_cms(
@@ -1045,73 +1054,29 @@ def streaming_cms(
     """Streaming Count-Min sketch with BOUNDED state: fold each
     micro-batch's ``depth x width`` counter deltas
     (operators/sketches.py::cms_sketch) into a persisted sketch store —
-    possible because Count-Min counters sum associatively, so the
-    landed store equals the batch sketch over everything delivered,
-    bit-for-bit, whatever the batch boundaries were (pinned by the
-    batch==stream parity test).
-
-    Per trigger: one map-side-combined counter hash-agg over the batch
-    (shuffle bounded by the counter universe, never the batch
-    vocabulary), one union+re-sum with the <= depth*width-row persisted
-    store, one versioned snapshot publish; a warehouse marker CAS-pins
-    the (sketch, meta) pair. The commit is keyed on batch_id in the
-    meta row (the streaming_heavy_hitters convention): foreachBatch is
-    at-least-once and a re-merged replay would double every counter, so
-    an incoming batch_id <= the stored one returns untouched.
+    possible because Count-Min counters sum associatively (union +
+    re-sum per counter), so the landed store equals the batch sketch
+    over everything delivered, bit-for-bit, whatever the batch
+    boundaries were (pinned by the batch==stream parity test). The
+    batch fold's shuffle is bounded by the counter universe, never the
+    batch vocabulary. Store: ``sketch`` (<= depth*width rows) + meta
+    ``(total, depth, width, last_bid)`` under the :func:`_sketch_store`
+    protocol; a re-merged replay would double every counter.
 
     Read estimates back with :func:`read_cms_estimates` — the same
     one-sided (never-undercount) guarantee as the batch sketch, time-
     travelable by warehouse snapshot."""
     from pw_etl_scrumptious_squad_spark.operators import sketches as SK
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import (
-        snapshot_read,
-        write_table_snapshot,
-    )
 
-    spark = items_stream.sparkSession
-
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        counts = SK.cms_sketch(batch, item_col, depth, width).transform(
-            materialize
-        )
-        row = counts.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("t")
-        ).first()
-        batch_total = int(row["t"])
-        if batch_total == 0:
-            return
-        if W.warehouse_version(store_dir, spark) > 0:
-            pinned = W.warehouse_snapshot_tables(store_dir, None, spark)
-            meta = snapshot_read(
-                spark, store_dir, "meta", version=pinned["meta"]
-            ).first().asDict()
-            last_bid = meta.get("last_bid")
-            if last_bid is not None and int(batch_id) <= int(last_bid):
-                return  # at-least-once replay of a committed batch
-            prior = snapshot_read(
-                spark, store_dir, "sketch", version=pinned["sketch"]
-            )
-            merged = (
-                prior.unionByName(counts)
-                .groupBy("r", "bucket")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-            total = int(meta["total"]) + batch_total
-        else:
-            merged, total = counts, batch_total
-        sv = write_table_snapshot(merged, store_dir, "sketch")
-        meta_df = spark.createDataFrame(
-            [(total, int(depth), int(width), int(batch_id))],
-            "total BIGINT, depth BIGINT, width BIGINT, last_bid BIGINT",
-        )
-        tv = write_table_snapshot(meta_df, store_dir, "meta")
-        W.commit_warehouse_snapshot(
-            store_dir, {"sketch": sv, "meta": tv}, spark
-        )
-
-    return run_foreach_batch(
-        items_stream, checkpoint_dir, batch_fn, processing_time=processing_time
+    return _sketch_store(
+        items_stream, store_dir, checkpoint_dir, processing_time,
+        table="sketch",
+        summarize=lambda batch: SK.cms_sketch(batch, item_col, depth, width),
+        merge=lambda both: both.groupBy("r", "bucket").agg(
+            F.sum("n").cast("bigint").alias("n")
+        ),
+        params={"depth": depth, "width": width},
+        total_col="n",
     )
 
 
@@ -1127,22 +1092,10 @@ def read_cms_estimates(
     to the batch ``cms_estimate`` over everything delivered up to that
     snapshot."""
     from pw_etl_scrumptious_squad_spark.operators import sketches as SK
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
 
-    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
-    meta = snapshot_read(
-        spark, store_dir, "meta", version=pinned["meta"]
-    ).first()
-    sketch = snapshot_read(
-        spark, store_dir, "sketch", version=pinned["sketch"]
-    )
+    sketch, meta = _read_store(spark, store_dir, "sketch", snapshot)
     return SK.cms_estimate(
-        sketch,
-        probes,
-        item_col,
-        depth=int(meta["depth"]),
-        width=int(meta["width"]),
+        sketch, probes, item_col, depth=meta["depth"], width=meta["width"]
     )
 
 
@@ -1159,70 +1112,31 @@ def streaming_kmv(
     micro-batch's per-group k-min-distinct hashes
     (operators/sketches.py::kmv_sketch) into a persisted sketch store.
     KMV merges EXACTLY (the k smallest distinct of a union are
-    computable from the per-input k-min sets alone), so the landed
-    store equals the batch sketch over everything delivered,
-    bit-for-bit, whatever the batch boundaries were — which also means
-    the set-algebra estimates (union / intersection distinct counts
-    per group pair) read identically off the stream store.
-
-    Per trigger: the batch's bounded fold, one groupBy-merge with the
-    <= groups*k-row persisted store (flatten + distinct + head-k, all
-    JVM array ops), one versioned snapshot publish CAS-pinned by a
-    warehouse marker. Replay-idempotent by the last_bid meta guard —
-    KMV merge is naturally idempotent (re-merging the same hashes is
-    a no-op), but the guard keeps the store version history 1:1 with
-    delivered batches and skips the wasted write.
+    computable from the per-input k-min sets alone: flatten + distinct
+    + head-k per group, all JVM array ops), so the landed store equals
+    the batch sketch over everything delivered, bit-for-bit, whatever
+    the batch boundaries were — which also means the set-algebra
+    estimates (union / intersection distinct counts per group pair)
+    read identically off the stream store. Store: ``sketch`` (<=
+    groups*k hashes) + meta ``(k, last_bid)`` under the
+    :func:`_sketch_store` protocol. The merge is naturally idempotent;
+    the replay guard keeps the version history 1:1 with delivered
+    batches and skips the wasted write.
 
     Read back with :func:`read_kmv_estimates`."""
     from pw_etl_scrumptious_squad_spark.operators import sketches as SK
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import (
-        snapshot_read,
-        write_table_snapshot,
-    )
 
-    spark = items_stream.sparkSession
-
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        partial = SK.kmv_sketch(batch, group_col, item_col, k).transform(
-            materialize
-        )
-        if partial.limit(1).count() == 0:
-            return
-        if W.warehouse_version(store_dir, spark) > 0:
-            pinned = W.warehouse_snapshot_tables(store_dir, None, spark)
-            meta = snapshot_read(
-                spark, store_dir, "meta", version=pinned["meta"]
-            ).first().asDict()
-            last_bid = meta.get("last_bid")
-            if last_bid is not None and int(batch_id) <= int(last_bid):
-                return  # at-least-once replay of a committed batch
-            prior = snapshot_read(
-                spark, store_dir, "sketch", version=pinned["sketch"]
-            )
-            merged = (
-                prior.unionByName(partial)
-                .groupBy("grp")
-                .agg(
-                    F.expr(
-                        f"slice(array_sort(array_distinct(flatten("
-                        f"collect_list(hs)))), 1, {k})"
-                    ).alias("hs")
-                )
-            )
-        else:
-            merged = partial
-        sv = write_table_snapshot(merged, store_dir, "sketch")
-        meta_df = spark.createDataFrame(
-            [(int(k), int(batch_id))], "k BIGINT, last_bid BIGINT"
-        )
-        tv = write_table_snapshot(meta_df, store_dir, "meta")
-        W.commit_warehouse_snapshot(
-            store_dir, {"sketch": sv, "meta": tv}, spark
-        )
-
-    return run_foreach_batch(
-        items_stream, checkpoint_dir, batch_fn, processing_time=processing_time
+    return _sketch_store(
+        items_stream, store_dir, checkpoint_dir, processing_time,
+        table="sketch",
+        summarize=lambda batch: SK.kmv_sketch(batch, group_col, item_col, k),
+        merge=lambda both: both.groupBy("grp").agg(
+            F.expr(
+                f"slice(array_sort(array_distinct(flatten("
+                f"collect_list(hs)))), 1, {k})"
+            ).alias("hs")
+        ),
+        params={"k": k},
     )
 
 
@@ -1238,17 +1152,9 @@ def read_kmv_estimates(
     batch ``kmv_set_estimates`` over everything delivered up to that
     snapshot."""
     from pw_etl_scrumptious_squad_spark.operators import sketches as SK
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
 
-    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
-    meta = snapshot_read(
-        spark, store_dir, "meta", version=pinned["meta"]
-    ).first()
-    sketch = snapshot_read(
-        spark, store_dir, "sketch", version=pinned["sketch"]
-    )
-    return SK.kmv_set_estimates(sketch, k=int(meta["k"]), pairs=pairs)
+    sketch, meta = _read_store(spark, store_dir, "sketch", snapshot)
+    return SK.kmv_set_estimates(sketch, k=meta["k"], pairs=pairs)
 
 
 def streaming_hll(
@@ -1267,28 +1173,19 @@ def streaming_hll(
     store equals the batch registers over everything delivered,
     bit-for-bit, whatever the batch boundaries were (the property
     y98's cumulative time series uses along the day axis; this twin
-    uses it along the arrival axis).
-
-    Per trigger: one map-side register agg over the batch (shuffle
-    bounded by groups x 2^p), one max-merge with the persisted store,
-    one versioned snapshot publish CAS-pinned by a warehouse marker.
-    Replay-idempotent twice over: max-merge re-applied is a no-op, and
-    the last_bid meta guard skips the wasted write (the
-    streaming_heavy_hitters convention).
+    uses it along the arrival axis). The batch fold's shuffle is
+    bounded by groups x 2^p. Store: ``regs`` + meta ``(p, last_bid)``
+    under the :func:`_sketch_store` protocol; a re-applied max-merge is
+    a no-op, and the replay guard skips the wasted write.
 
     Read back with :func:`read_hll_estimates` — identical to the batch
     ``hll_estimate_from_registers`` over everything delivered."""
     from pw_etl_scrumptious_squad_spark.operators import curation as C
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import (
-        snapshot_read,
-        write_table_snapshot,
-    )
 
-    spark = items_stream.sparkSession
-
-    def batch_fn(batch: DataFrame, batch_id: int) -> None:
-        regs = C.hll_registers(
+    return _sketch_store(
+        items_stream, store_dir, checkpoint_dir, processing_time,
+        table="regs",
+        summarize=lambda batch: C.hll_registers(
             batch.select(
                 F.col(group_col).cast("string").alias("grp"),
                 F.col(item_col).alias("__item"),
@@ -1296,38 +1193,11 @@ def streaming_hll(
             ["grp"],
             "__item",
             p,
-        ).transform(materialize)
-        if regs.limit(1).count() == 0:
-            return
-        if W.warehouse_version(store_dir, spark) > 0:
-            pinned = W.warehouse_snapshot_tables(store_dir, None, spark)
-            meta = snapshot_read(
-                spark, store_dir, "meta", version=pinned["meta"]
-            ).first().asDict()
-            last_bid = meta.get("last_bid")
-            if last_bid is not None and int(batch_id) <= int(last_bid):
-                return  # at-least-once replay of a committed batch
-            prior = snapshot_read(
-                spark, store_dir, "regs", version=pinned["regs"]
-            )
-            merged = (
-                prior.unionByName(regs)
-                .groupBy("grp", "__bucket")
-                .agg(F.max("__r").alias("__r"))
-            )
-        else:
-            merged = regs
-        sv = write_table_snapshot(merged, store_dir, "regs")
-        meta_df = spark.createDataFrame(
-            [(int(p), int(batch_id))], "p BIGINT, last_bid BIGINT"
-        )
-        tv = write_table_snapshot(meta_df, store_dir, "meta")
-        W.commit_warehouse_snapshot(
-            store_dir, {"regs": sv, "meta": tv}, spark
-        )
-
-    return run_foreach_batch(
-        items_stream, checkpoint_dir, batch_fn, processing_time=processing_time
+        ),
+        merge=lambda both: both.groupBy("grp", "__bucket").agg(
+            F.max("__r").alias("__r")
+        ),
+        params={"p": p},
     )
 
 
@@ -1341,14 +1211,6 @@ def read_hll_estimates(
     the batch estimate over everything delivered up to that
     snapshot."""
     from pw_etl_scrumptious_squad_spark.operators import curation as C
-    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
-    from pw_etl_scrumptious_squad_spark.sources.parquet import snapshot_read
 
-    pinned = W.warehouse_snapshot_tables(store_dir, snapshot, spark)
-    meta = snapshot_read(
-        spark, store_dir, "meta", version=pinned["meta"]
-    ).first()
-    regs = snapshot_read(
-        spark, store_dir, "regs", version=pinned["regs"]
-    )
-    return C.hll_estimate_from_registers(regs, ["grp"], int(meta["p"]))
+    regs, meta = _read_store(spark, store_dir, "regs", snapshot)
+    return C.hll_estimate_from_registers(regs, ["grp"], meta["p"])

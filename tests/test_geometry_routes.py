@@ -139,9 +139,7 @@ def test_semdedup_routes_identical(spark):
     a = curation.semdedup_prune(
         corpus, cents, threshold_ppb=400_000_000, impl="expr"
     )
-    b = curation.semdedup_prune(
-        corpus, cents, threshold_ppb=400_000_000, n_rows_hint=10**9
-    )
+    b = curation.semdedup_prune(corpus, cents, threshold_ppb=400_000_000)
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb

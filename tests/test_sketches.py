@@ -336,6 +336,15 @@ def test_streaming_cms_equals_batch_and_is_idempotent(spark, tmp_path):
     )
     assert got2 == want
 
+    # a stream at another width would fold incompatible counters into
+    # the store (estimates that undercount): refused before it starts
+    with pytest.raises(ValueError, match="width"):
+        sp.streaming_cms(
+            stream(), store, str(tmp_path / "ckpt3"), depth=3, width=32
+        )
+    assert W.warehouse_version(store, spark) == before_version
+    assert not (tmp_path / "ckpt3").exists()
+
 
 def test_streaming_kmv_equals_batch_and_is_idempotent(spark, tmp_path):
     """KMV merges exactly (k smallest distinct of a union from per-batch

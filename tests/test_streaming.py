@@ -915,6 +915,101 @@ def test_streaming_heavy_hitters_replay_is_idempotent(spark, tmp_path):
     assert _state() == before
 
 
+def _sketch_batch_fn(spark, streaming_store, store, **kw):
+    """The foreachBatch function a sketch store runs, built without
+    starting a streaming query: tests drive it on static frames with
+    explicit batch ids."""
+    built = []
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(
+            sp, "run_foreach_batch", lambda df, ckpt, fn, **_: built.append(fn)
+        )
+        streaming_store(spark.range(0), store, "no-checkpoint", **kw)
+    return built[0]
+
+
+def test_sketch_store_folds_a_meta_without_last_bid(spark, tmp_path):
+    """A store from before round 10 has a meta without ``last_bid``: the
+    next batch must fold whatever its id (no replay guard to apply),
+    carry the cumulative ``total`` and ``dec`` on, and record
+    ``last_bid`` from then on."""
+    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
+    from pw_etl_scrumptious_squad_spark.sources.parquet import (
+        snapshot_read,
+        write_table_snapshot,
+    )
+
+    store = str(tmp_path / "hhstore")
+    # the capacity-2 summary of "a a a b c": the trim took 1 off each
+    # counter, leaving {a: 2} with D = 1
+    W.commit_warehouse_snapshot(
+        store,
+        {
+            "mg": write_table_snapshot(
+                spark.createDataFrame([("a", 2)], "token STRING, cnt BIGINT"),
+                store,
+                "mg",
+            ),
+            "meta": write_table_snapshot(
+                spark.createDataFrame([(5, 1)], "total BIGINT, dec BIGINT"),
+                store,
+                "meta",
+            ),
+        },
+        spark,
+    )
+    fold = _sketch_batch_fn(
+        spark, sp.streaming_heavy_hitters, store, capacity=2
+    )
+    fold(spark.createDataFrame([("a b b",)], "text STRING"), 0)
+
+    pinned = W.warehouse_snapshot_tables(store, None, spark)
+    meta = snapshot_read(spark, store, "meta", version=pinned["meta"])
+    assert meta.columns == ["total", "dec", "last_bid"]
+    assert tuple(meta.first()) == (8, 1, 0)
+    mg = snapshot_read(spark, store, "mg", version=pinned["mg"])
+    assert sorted(map(tuple, mg.collect())) == [("a", 3), ("b", 2)]
+
+
+def test_sketch_store_failed_commit_is_invisible_and_retried_once(
+    spark, tmp_path
+):
+    """A batch whose warehouse commit raises has published table
+    versions but no marker: readers stay on the previous snapshot, and
+    the retried batch commits once."""
+    from pw_etl_scrumptious_squad_spark.sources import warehouse as W
+
+    store = str(tmp_path / "cmsstore")
+    # wide enough that x, y and z share no counter: estimates are exact
+    fold = _sketch_batch_fn(
+        spark, sp.streaming_cms, store, depth=2, width=1024
+    )
+
+    def items(*xs):
+        return spark.createDataFrame([(x,) for x in xs], "item STRING")
+
+    fold(items("x", "x", "x", "y"), 0)
+    after_b0 = W.warehouse_snapshot_tables(store, None, spark)
+
+    def lost_commit(*args, **kw):
+        raise OSError("warehouse marker not written")
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(W, "commit_warehouse_snapshot", lost_commit)
+        with pytest.raises(OSError):
+            fold(items("x", "z", "z"), 1)
+    assert W.warehouse_version(store, spark) == 1
+    # readers resolve through the marker, which still pins batch 0
+    assert W.warehouse_snapshot_tables(store, None, spark) == after_b0
+
+    fold(items("x", "z", "z"), 1)
+    assert W.warehouse_version(store, spark) == 2
+    got = sp.read_cms_estimates(spark, store, items("x", "y", "z"))
+    assert sorted(map(tuple, got.collect())) == [
+        ("x", 4), ("y", 1), ("z", 2)
+    ]
+
+
 @pytest.mark.extended  # ~16 s; default tier: the file-scheme retention
 # test covers the same bound; this re-runs it on viewfs://
 def test_streaming_cc_retention_on_non_file_scheme(spark, tmp_path):

@@ -513,8 +513,7 @@ def operator_queries(spark, d: str, n_docs: int, n_vecs: int, cents):
             n_probe=3,
         ),
         # SemDeDup scale route: int64 numpy matmul assignment + within-
-        # cell prune (forced via the n_rows_hint > max_exact_rows rule),
-        # decision-identical to y48's oracle-matched expression path
+        # cell prune (the default tier), decision-identical to y48's oracle-matched expression path
         # (parity pinned in tests/test_geometry_routes.py). Centroids
         # are trained PER SIZE with k ~ rows/2000 — the SemDeDup design
         # sizes cells to the corpus so the within-cell quadratic stage
@@ -523,7 +522,6 @@ def operator_queries(spark, d: str, n_docs: int, n_vecs: int, cents):
         # stage alpha 1.77.
         "op_semdedup_matmul": lambda: curation.semdedup_prune(
             emb(), size_cents(), threshold_ppb=400_000_000,
-            max_exact_rows=0, n_rows_hint=n_vecs,
         ),
         # hard-negative mining, IVF-probed scale route: per-size
         # centroids (k ~ rows/2000, the SemDeDup knob) keep cell size
