@@ -49,6 +49,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pw_etl_scrumptious_squad_spark.sources.parquet import _hadoop_fs
+
 # Test-scale default. Sizing rule at cluster scale: pick N so one bucket
 # of the LARGER table is a comfortable task (~128-512 MB of parquet) —
 # a 100 TB fact wants N in the tens of thousands — then round to a value
@@ -81,7 +83,8 @@ def _source_fingerprint(sf_dir: str, spark: SparkSession | None = None) -> str:
     stale cached one being silently adopted (round-8 advice: the
     persistent /tmp cache outlives testdata regeneration). Local paths
     walk the filesystem directly; schemed paths (s3a://, viewfs://) go
-    through the Hadoop FileSystem listing and require ``spark``."""
+    through the Hadoop FileSystem listing of ``spark``'s (or the active)
+    session."""
     key = sf_dir if "://" in sf_dir else os.path.abspath(sf_dir)
     cached = _FPRINT.get(key)
     if cached is not None:
@@ -96,14 +99,7 @@ def _source_fingerprint(sf_dir: str, spark: SparkSession | None = None) -> str:
                     f"{os.path.relpath(p, key)}:{st.st_size}:{int(st.st_mtime)}"
                 )
     else:
-        if spark is None:
-            raise ValueError(
-                f"fingerprinting the schemed source {key} needs a"
-                " SparkSession (Hadoop FileSystem rides the JVM gateway)"
-            )
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(key)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath, _ = _hadoop_fs(key, spark)
         if fs.exists(jpath):
             it = fs.listFiles(jpath, True)
             while it.hasNext():
@@ -212,13 +208,11 @@ def ensure_bucketed(
         return table
     root = base_dir or bucketed_root()
     final = os.path.join(root, table)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
+    fs, _, jvm = _hadoop_fs(root, spark)
 
     def _jp(p: str):
         return jvm.org.apache.hadoop.fs.Path(p)
 
-    fs = _jp(root).getFileSystem(hconf)
     jsuccess = _jp(os.path.join(final, "_SUCCESS"))
     if not fs.exists(jsuccess):
         tmp_table = f"{table}_pub_{uuid.uuid4().hex[:8]}"

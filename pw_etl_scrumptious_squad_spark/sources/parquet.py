@@ -168,34 +168,19 @@ def table_exists(
     base_dir: str, name: str, spark: SparkSession | None = None
 ) -> bool:
     """Existence probe (reference ``check_table_in_bucket``,
-    ``src/extract.py:148-156``).
+    ``src/extract.py:148-156``): the live ``<name>.parquet`` dir, or a
+    table that lives only as committed versions in its manifest.
 
-    Plain local paths short-circuit to ``os.path.exists``. Any
-    URI-schemed path (``file://``, ``s3a://``, ``hdfs://``) probes
-    through the Hadoop FileSystem API via the JVM gateway — the SAME
-    code path a real deployment uses against an object store, exercised
-    locally through ``file://`` (``Path.getFileSystem`` resolves the
-    scheme from the session's Hadoop conf, so s3a credentials/endpoints
-    configure exactly like any Spark job's). Passing ``spark``
-    explicitly also forces the Hadoop route for local paths (used by
-    the tests to pin the probe's behavior without an object store)."""
-    path = table_path(base_dir, name)
-    if "://" not in path and spark is None:
-        # versioned-only tables (round 8) have no legacy live dir —
-        # their existence is the manifest's committed-version count
-        return os.path.exists(path) or table_version(base_dir, name) > 0
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise ValueError(
-            "object-store existence probe needs an active SparkSession"
-            " (Hadoop FileSystem API rides the JVM gateway)"
-        )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    return bool(fs.exists(jpath))
+    Routing follows the one rule of the ``fs_*`` helpers: a plain path
+    probes through ``os``, any ``scheme://`` path (``file://``,
+    ``s3a://``, ``hdfs://``) through the Hadoop FileSystem API — the
+    same code path a real deployment uses against an object store,
+    exercised locally through ``file://``. ``spark`` only supplies the
+    session for schemed paths (the active one when omitted)."""
+    return (
+        fs_exists(table_path(base_dir, name), spark)
+        or table_version(base_dir, name, spark) > 0
+    )
 
 
 def write_table(
@@ -308,38 +293,14 @@ def _resolve_snapshot(
     call) resolve to the legacy live path ``<name>.parquet`` when it
     exists, else walk back to the newest older version with published
     data. Returns ``(0, legacy_path_or_None)`` for tables never written
-    through the versioned path."""
+    through the versioned path.
+
+    Markers and data dirs are probed through the ``fs_*`` helpers: a
+    plain path through ``os`` (no Py4J round trip), a ``scheme://`` path
+    through the Hadoop FileSystem; ``spark`` only supplies the session
+    for the latter."""
     mdir = _manifest_dir(base_dir, name)
     legacy = table_path(base_dir, name)
-
-    def _exists(p: str) -> bool:
-        if "://" not in p and spark is None:
-            return os.path.exists(p)
-        return _fs_exists(p, spark)
-
-    def _marker_content(v: int) -> str:
-        marker = os.path.join(mdir, f"v{v}")
-        if "://" not in marker and spark is None:
-            try:
-                with open(marker) as fh:
-                    return fh.read().strip()
-            except FileNotFoundError:
-                return ""
-        s = _get_spark(spark)
-        jvm = s._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(marker)
-        fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return ""
-        stream = fs.open(jpath)
-        try:
-            data = bytes(
-                jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
-            )
-        finally:
-            stream.close()
-        return data.decode("utf-8").strip()
-
     latest = table_version(base_dir, name, spark)
     v = latest if version is None else version
     if version is not None and version > latest:
@@ -347,10 +308,10 @@ def _resolve_snapshot(
             f"{name}: version {version} not committed (latest {latest})"
         )
     while v >= 1:
-        rel = _marker_content(v)
+        rel = (fs_read_text(os.path.join(mdir, f"v{v}"), spark) or "").strip()
         if rel:
             data_path = os.path.join(mdir, rel)
-            if _exists(data_path):
+            if fs_exists(data_path, spark):
                 return v, data_path
             # claimed-with-content but dir missing: vacuumed or abused —
             # keep walking back (explicit version requests fail below)
@@ -360,30 +321,14 @@ def _resolve_snapshot(
                 )
         else:
             # legacy empty marker: the live path WAS the snapshot
-            if _exists(legacy):
+            if fs_exists(legacy, spark):
                 return v, legacy
             if version is not None:
                 raise ValueError(
                     f"{name}: version {version} has no published data"
                 )
         v -= 1
-    return 0, (legacy if _exists(legacy) else None)
-
-
-def _get_spark(spark: SparkSession | None) -> SparkSession:
-    if spark is not None:
-        return spark
-    s = SparkSession.getActiveSession()
-    if s is None:
-        raise ValueError("schemed path needs an active SparkSession")
-    return s
-
-
-def _fs_exists(path: str, spark: SparkSession | None) -> bool:
-    s = _get_spark(spark)
-    jpath = s._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+    return 0, (legacy if fs_exists(legacy, spark) else None)
 
 
 def snapshot_read(
@@ -399,7 +344,9 @@ def snapshot_read(
     ``version=N`` reads exactly version N (raising if it was never
     committed or its data dir was vacuumed). Works on any scheme the
     Hadoop FS speaks — unlike :func:`read_table`'s local-only manifest
-    auto-resolution."""
+    auto-resolution. Resolution follows the ``fs_*`` routing rule: a
+    plain ``base_dir`` resolves through ``os``, a ``scheme://`` one
+    through the Hadoop FileSystem of ``spark``'s session."""
     _, data_path = _resolve_snapshot(base_dir, name, version, spark)
     if data_path is None:
         raise FileNotFoundError(f"{name}: no committed snapshot in {base_dir}")
@@ -411,24 +358,9 @@ def table_version(
 ) -> int:
     """Current committed version of a mutating table: the max ``v<N>``
     marker in ``<name>.manifest/`` (0 when the table has never been
-    written through the versioned path). Schemed paths list through the
-    Hadoop FileSystem API (the table_exists contract)."""
-    mdir = _manifest_dir(base_dir, name)
-    if "://" not in mdir and spark is None:
-        try:
-            names = os.listdir(mdir)
-        except FileNotFoundError:
-            return 0
-    else:
-        if spark is None:
-            spark = SparkSession.getActiveSession()
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(mdir)
-        fs = jpath.getFileSystem(hconf)
-        if not fs.exists(jpath):
-            return 0
-        names = [s.getPath().getName() for s in fs.listStatus(jpath)]
+    written through the versioned path), listed by
+    :func:`fs_list_names`."""
+    names = fs_list_names(_manifest_dir(base_dir, name), spark)
     versions = [int(n[1:]) for n in names if n.startswith("v") and n[1:].isdigit()]
     return max(versions, default=0)
 
@@ -460,38 +392,31 @@ def _claim_version(
     mdir = _manifest_dir(base_dir, name)
     marker = os.path.join(mdir, f"v{expected + 1}")
     content = (data_rel or "").encode("utf-8")
-    if "://" not in mdir and spark is None:
+    tmp = os.path.join(mdir, f".claim-{uuid.uuid4().hex}")
+    if "://" not in mdir:
         os.makedirs(mdir, exist_ok=True)
-        tmp = os.path.join(mdir, f".claim-{uuid.uuid4().hex}")
         with open(tmp, "wb") as fh:
             fh.write(content)
         try:
             os.link(tmp, marker)
+            won = True
         except FileExistsError:
-            raise ConcurrentWriteError(
-                f"{name}: version {expected + 1} already committed by a"
-                " concurrent writer; re-read and retry"
-            ) from None
+            won = False
         finally:
             os.unlink(tmp)
-        return expected + 1
-    s = _get_spark(spark)
-    jvm = s._jvm
-    hconf = s._jsc.hadoopConfiguration()
-    jdir = jvm.org.apache.hadoop.fs.Path(mdir)
-    fs = jdir.getFileSystem(hconf)
-    fs.mkdirs(jdir)
-    jtmp = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(mdir, f".claim-{uuid.uuid4().hex}")
-    )
-    out = fs.create(jtmp, False)
-    try:
-        out.write(bytearray(content))
-    finally:
-        out.close()
-    jmarker = jvm.org.apache.hadoop.fs.Path(marker)
-    if not fs.rename(jtmp, jmarker):
-        fs.delete(jtmp, False)
+    else:
+        fs, jdir, jvm = _hadoop_fs(mdir, spark)
+        fs.mkdirs(jdir)
+        jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+        out = fs.create(jtmp, False)
+        try:
+            out.write(bytearray(content))
+        finally:
+            out.close()
+        won = bool(fs.rename(jtmp, jvm.org.apache.hadoop.fs.Path(marker)))
+        if not won:
+            fs.delete(jtmp, False)
+    if not won:
         raise ConcurrentWriteError(
             f"{name}: version {expected + 1} already committed by a"
             " concurrent writer; re-read and retry"
@@ -570,7 +495,6 @@ def _publish_snapshot(
     existed — so the round-7 window (retry re-reading the live dir
     mid-overwrite and merging against a partial snapshot) is closed by
     construction: the live directory is never overwritten at all."""
-    import shutil
     import uuid
 
     mdir = _manifest_dir(base_dir, name)
@@ -582,8 +506,7 @@ def _publish_snapshot(
     except ConcurrentWriteError:
         # the snapshot we built is stale; remove the orphan and let the
         # caller re-read the winner's (fully published) version
-        if "://" not in data_path:
-            shutil.rmtree(data_path, ignore_errors=True)
+        fs_delete(data_path, recursive=True)
         raise
 
 
@@ -752,9 +675,7 @@ def compact_table(
         # schemed stores: one getContentSummary RPC sizes the snapshot
         # (counts _SUCCESS/CRC noise too — immaterial to a file-count
         # ceiling division)
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(snap_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath, _ = _hadoop_fs(snap_path, spark)
         total = int(fs.getContentSummary(jpath).getLength())
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = _read_parquet_normalized(spark, snap_path, name)
@@ -976,7 +897,7 @@ def read_table_evolving(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return (
         spark.read.option("mergeSchema", "true")
-        .parquet(table_path(base_dir, name))
+        .parquet(_resolved_path(base_dir, name))
     )
 
 
@@ -987,8 +908,9 @@ def read_table_evolving(
 # store is just another Hadoop FileSystem scheme: the SAME read_table /
 # write_table / table_exists code paths work against s3a:// once the
 # session's Hadoop conf carries credentials + endpoint. These helpers are
-# that conf seam, plus the prefix-based bucket resolution — and the tests
-# exercise every one of them through a genuinely non-file:// scheme
+# that conf seam, the one FileSystem handshake (_hadoop_fs), the fs_*
+# metadata-I/O helpers and the prefix-based bucket resolution — and the
+# tests exercise every one of them through a genuinely non-file:// scheme
 # (viewfs:// mounted over a local directory), so the URI plumbing is
 # proven without an object store in the sandbox.
 # ---------------------------------------------------------------------------
@@ -1046,28 +968,51 @@ def configure_object_store(
         hconf.set(k, str(v))
 
 
-def _hadoop_fs(spark: SparkSession, uri: str):
-    jvm = spark._jvm
+def _get_spark(spark: SparkSession | None) -> SparkSession:
+    if spark is not None:
+        return spark
+    s = SparkSession.getActiveSession()
+    if s is None:
+        raise ValueError("schemed path needs an active SparkSession")
+    return s
+
+
+def _hadoop_fs(uri: str, spark: SparkSession | None = None):
+    """``(FileSystem, Path, jvm)`` for ``uri`` — the package's one JVM
+    handshake. ``Path.getFileSystem`` resolves the scheme from the
+    session's Hadoop conf, so s3a credentials/endpoints configure exactly
+    like any Spark job's; ``spark`` defaults to the active session."""
+    s = _get_spark(spark)
+    jvm = s._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(uri)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
+    return jpath.getFileSystem(s._jsc.hadoopConfiguration()), jpath, jvm
+
+
+# The fs_* helpers below are the lake's metadata I/O (markers, manifests,
+# existence probes, listings) and share one routing rule: a plain path
+# goes through ``os``, any ``scheme://`` path through the Hadoop
+# FileSystem. ``spark`` never picks the route; ``file://`` is how a
+# caller takes the Hadoop route on a local disk.
+
+
+def fs_exists(path: str, spark: SparkSession | None = None) -> bool:
+    """Whether ``path`` (file or directory) exists on any scheme."""
+    if "://" not in path:
+        return os.path.exists(path)
+    fs, jpath, _ = _hadoop_fs(path, spark)
+    return bool(fs.exists(jpath))
 
 
 def fs_write_text(path: str, text: str, spark: SparkSession | None = None) -> None:
     """Write a small text file at ``path`` on whatever filesystem its
-    scheme resolves to — plain ``open()`` for local paths (no Py4J
-    round trips), the Hadoop FileSystem API for
-    ``s3a://``/``viewfs://``/``hdfs://``-class URIs (same chain as the
-    snapshot markers). For metadata-sized sidecar files (manifests,
+    scheme resolves to. For metadata-sized sidecar files (manifests,
     markers) only, never data."""
     if "://" not in path:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         with open(path, "w") as fh:
             fh.write(text)
         return
-    s = _get_spark(spark)
-    jvm = s._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
+    fs, jpath, _ = _hadoop_fs(path, spark)
     out = fs.create(jpath, True)  # overwrite
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -1076,18 +1021,21 @@ def fs_write_text(path: str, text: str, spark: SparkSession | None = None) -> No
 
 
 def fs_read_text(path: str, spark: SparkSession | None = None) -> str | None:
-    """Read a small text file from any scheme (see :func:`fs_write_text`);
-    returns ``None`` when the file does not exist."""
+    """Read a small text file from any scheme; ``None`` when the file does
+    not exist.
+
+    A plain path reads through ``open()`` even when a SparkSession is at
+    hand: the hot snapshot-resolution path (``read_warehouse_snapshot``
+    and ``snapshot_read`` always pass ``spark``) must not pay Py4J round
+    trips for a local marker. A schemed file is read whole in one Py4J
+    call (markers are tiny), never a round trip per byte."""
     if "://" not in path:
         try:
             with open(path) as fh:
                 return fh.read()
         except FileNotFoundError:
             return None
-    s = _get_spark(spark)
-    jvm = s._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
+    fs, jpath, jvm = _hadoop_fs(path, spark)
     if not fs.exists(jpath):
         return None
     stream = fs.open(jpath)
@@ -1103,15 +1051,13 @@ def fs_read_text(path: str, spark: SparkSession | None = None) -> str | None:
 def fs_list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     """Immediate child names of a directory on any scheme; ``[]`` when
     the directory does not exist. The scheme-agnostic twin of
-    ``os.listdir`` the retention/vacuum layer routes through."""
+    ``os.listdir``."""
     if "://" not in path:
         try:
             return os.listdir(path)
         except FileNotFoundError:
             return []
-    s = _get_spark(spark)
-    jpath = s._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
+    fs, jpath, _ = _hadoop_fs(path, spark)
     if not fs.exists(jpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(jpath)]
@@ -1135,9 +1081,7 @@ def fs_delete(
             return True
         except FileNotFoundError:
             return False
-    s = _get_spark(spark)
-    jpath = s._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
+    fs, jpath, _ = _hadoop_fs(path, spark)
     return bool(fs.delete(jpath, bool(recursive)))
 
 
@@ -1146,7 +1090,7 @@ def list_store(spark: SparkSession, uri: str) -> list[tuple[str, bool]]:
     reference's ``get_file_info_in_bucket`` (src/extract.py:120-129)
     through the Hadoop FileSystem API (works for file://, viewfs://,
     s3a://, hdfs:// alike)."""
-    fs, jpath, _ = _hadoop_fs(spark, uri)
+    fs, jpath, _ = _hadoop_fs(uri, spark)
     return sorted(
         (st.getPath().getName(), bool(st.isDirectory()))
         for st in fs.listStatus(jpath)

@@ -16,13 +16,14 @@ part (the maxima over the source snapshots) runs distributed.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pw_etl_scrumptious_squad_spark.sources.parquet import fs_exists
 
 STATE_SCHEMA = T.StructType(
     [
@@ -78,8 +79,7 @@ class WatermarkStore:
         self.path = path
 
     def load(self) -> dict[str, Watermark]:
-        local = self.path.removeprefix("file://")
-        if "://" not in local and not os.path.exists(local):
+        if not fs_exists(self.path, self.spark):
             return {}
         rows = self.spark.read.schema(STATE_SCHEMA).parquet(self.path).collect()
         return {

@@ -41,6 +41,8 @@ from pw_etl_scrumptious_squad_spark.sources.parquet import (
     ConcurrentWriteError,
     _claim_version,
     _manifest_dir,
+    fs_delete,
+    fs_read_text,
     snapshot_read,
     table_version,
 )
@@ -103,37 +105,15 @@ def warehouse_snapshot_tables(
     (``snapshot=None`` = latest). Raises if no snapshot was ever
     committed or the requested id doesn't exist."""
     v = snapshot if snapshot is not None else warehouse_version(base_dir, spark)
-    marker = os.path.join(_manifest_dir(base_dir, _WH), f"v{v}")
     if v <= 0:
         raise FileNotFoundError(f"no warehouse snapshot committed in {base_dir}")
-    # schemeless markers read through plain open() regardless of whether a
-    # SparkSession is at hand: the hot read path (read_warehouse_snapshot
-    # always passes spark) must not pay Py4J round trips for a local file
-    # (round-8 advice)
-    if "://" not in marker:
-        try:
-            with open(marker) as fh:
-                return {t: int(n) for t, n in json.loads(fh.read()).items()}
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"warehouse snapshot v{v} does not exist in {base_dir}"
-            ) from None
-    s = spark or SparkSession.getActiveSession()
-    jvm = s._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = jpath.getFileSystem(s._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
+    marker = os.path.join(_manifest_dir(base_dir, _WH), f"v{v}")
+    text = fs_read_text(marker, spark)
+    if text is None:
         raise FileNotFoundError(
             f"warehouse snapshot v{v} does not exist in {base_dir}"
         )
-    # whole-file read in ONE Py4J call (markers are tiny JSON) — the
-    # prior loop paid a JVM round trip per BYTE on the hot read path
-    stream = fs.open(jpath)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return {t: int(c) for t, c in json.loads(data.decode()).items()}
+    return {t: int(n) for t, n in json.loads(text).items()}
 
 
 def vacuum_warehouse(
@@ -151,8 +131,6 @@ def vacuum_warehouse(
     old markers can't change the latest version (``table_version`` is
     the max marker). Scheme-agnostic like ``vacuum_table`` (round-10).
     Returns the deleted marker names."""
-    from pw_etl_scrumptious_squad_spark.sources.parquet import fs_delete
-
     latest = warehouse_version(base_dir, spark)
     keep_floor = max(1, latest - keep_last + 1)
     mdir = _manifest_dir(base_dir, _WH)

@@ -528,6 +528,24 @@ def test_schema_evolution_read_and_repair(spark, tmp_path):
     assert sorted(plain.columns) == ["id", "name", "score"]
     assert plain.count() == 3
 
+    # once the table is versioned (compact, then upsert), the evolving
+    # read scans the committed snapshot, as read_table does
+    pq.compact_table(spark, str(tmp_path), "t_repaired")
+    pq.upsert_table(
+        spark,
+        spark.createDataFrame(
+            [(4, "d", 40.0)], "id LONG, name STRING, score DOUBLE"
+        ),
+        str(tmp_path),
+        "t_repaired",
+        ["id"],
+    )
+    evolved = pq.read_table_evolving(spark, str(tmp_path), "t_repaired")
+    assert sorted(r["id"] for r in evolved.collect()) == [1, 2, 3, 4]
+    assert sorted(
+        r["id"] for r in pq.read_table(spark, str(tmp_path), "t_repaired").collect()
+    ) == [1, 2, 3, 4]
+
 
 def test_corrupt_parquet_file_quarantined_by_conf(spark, tmp_path):
     """A garbage file dropped into a lake table directory must not sink
@@ -552,10 +570,14 @@ def test_corrupt_parquet_file_quarantined_by_conf(spark, tmp_path):
 
 
 def test_table_exists_hadoop_fs_probe(spark, tmp_path):
-    """The existence probe routes URI-schemed paths (and any call with an
-    explicit SparkSession) through the Hadoop FileSystem API — the same
-    code path an s3a:// deployment uses, exercised here via file:// —
-    and agrees with the os.path fast path for plain local paths."""
+    """The existence probe routes URI-schemed paths through the Hadoop
+    FileSystem API — the same code path an s3a:// deployment uses,
+    exercised here via file:// — and agrees with the os.path fast path
+    for plain local paths, with or without an explicit SparkSession. A
+    table that exists only as committed versions (no live dir) is found
+    on every route."""
+    import os
+
     from pw_etl_scrumptious_squad_spark.sources import parquet as lake
 
     base = str(tmp_path)
@@ -564,12 +586,19 @@ def test_table_exists_hadoop_fs_probe(spark, tmp_path):
     # plain local path: os.path fast path
     assert lake.table_exists(base, "probe_tbl") is True
     assert lake.table_exists(base, "missing_tbl") is False
-    # forced Hadoop route on a plain path
+    # an explicit session on a plain path keeps the os.path route
     assert lake.table_exists(base, "probe_tbl", spark=spark) is True
     assert lake.table_exists(base, "missing_tbl", spark=spark) is False
     # URI-schemed path: Hadoop route resolves the scheme from the conf
     assert lake.table_exists(f"file://{base}", "probe_tbl") is True
     assert lake.table_exists(f"file://{base}", "missing_tbl") is False
+
+    # versioned-only table: write_table_snapshot leaves no live dir
+    lake.write_table_snapshot(spark.range(2), base, "versioned_tbl")
+    assert not os.path.exists(lake.table_path(base, "versioned_tbl"))
+    assert lake.table_exists(base, "versioned_tbl") is True
+    assert lake.table_exists(base, "versioned_tbl", spark=spark) is True
+    assert lake.table_exists(f"file://{base}", "versioned_tbl") is True
 
 
 def test_upsert_concurrent_writers_no_silent_loss(spark, tmp_path):

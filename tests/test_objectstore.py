@@ -145,3 +145,20 @@ def test_versioned_snapshots_through_non_file_scheme(spark, lake):
         r["id"]
         for r in P.snapshot_read(spark, bucket, "wh", version=1).collect()
     } == {1, 2}
+
+
+def test_watermark_store_through_non_file_scheme(spark, lake):
+    """The first extract cycle finds no state file on the object store:
+    load() returns {} instead of raising, and save/load round-trips."""
+    from datetime import datetime
+
+    from pw_etl_scrumptious_squad_spark.sources.state import (
+        Watermark,
+        WatermarkStore,
+    )
+
+    store = WatermarkStore(spark, f"{lake}/totesys-etl-ingested-2024/_state")
+    assert store.load() == {}
+    wm = Watermark(datetime(2023, 1, 2, 3, 4, 5), datetime(2023, 6, 7, 8, 9))
+    store.save({"sales_order": wm})
+    assert store.load() == {"sales_order": wm}

@@ -136,3 +136,31 @@ def test_vacuum_respects_warehouse_pins_until_retired(spark, base):
         wh.read_warehouse_snapshot(spark, base, "dim", snapshot=3).first()["v"]
         == "dim-c"
     )
+
+
+def test_pinned_local_resolution_makes_no_py4j_calls(spark, base, monkeypatch):
+    """Resolving a pinned snapshot on a plain path reads its markers
+    through os even when a session is passed: zero Py4J round trips."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from pw_etl_scrumptious_squad_spark.sources.parquet import _resolve_snapshot
+
+    _seed(spark, base)
+    main = threading.get_ident()
+    calls = []
+    original = GatewayClient.send_command
+
+    def counting(client, command, *args, **kwargs):
+        # memory (GC detach) commands are not round trips the code makes
+        if threading.get_ident() == main and not command.startswith("m"):
+            calls.append(command)
+        return original(client, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    pinned = wh.warehouse_snapshot_tables(base, None, spark)
+    version, data_path = _resolve_snapshot(base, "dim", pinned["dim"], spark)
+    monkeypatch.undo()
+    assert len(calls) == 0
+    assert version == 1 and data_path.endswith(".data")
