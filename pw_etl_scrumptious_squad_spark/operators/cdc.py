@@ -133,53 +133,71 @@ def apply_diff(
     return kept.unionByName(incoming)
 
 
-def incremental_extract(
+def table_maxima(
     tables: dict[str, DataFrame],
-    state: dict[str, Watermark],
-    inclusive: bool = False,
-) -> tuple[dict[str, DataFrame], dict[str, Watermark]]:
-    """Per-table dispatch (reference ``check_each_table``,
-    ``src/extract.py:202-238``) decided by ONE Spark job for all tables:
-    first sight of a table -> full scan; otherwise delta-only. Returns
-    only non-empty deltas, like the reference (``src/extract.py:230-237``),
-    and the advanced state. Pure: the caller loads and commits the state
-    (``plans.etl.extract`` commits after staging).
+) -> dict[str, tuple[datetime | None, datetime | None]]:
+    """``(max created_at, max last_updated)`` of every table, in ONE Spark
+    job; ``(None, None)`` for a table with no non-NULL audit value. No
+    job starts when ``tables`` is empty.
 
     The job is a ``unionAll`` of ``(table index, created_at,
     last_updated)`` projections grouped by the index — one shuffle for
     any number of tables (a union of per-table aggregates would plan one
-    exchange, hence one AQE job, per table). Exact against the
-    per-delta rule ``max(prev, delta_watermark(extract_delta(...)))``:
-    a row passes the delta predicate iff one of its audit timestamps
-    passes the stored watermark (``>``, or ``>=`` when inclusive), so the
-    delta is non-empty iff a snapshot maximum does, and the monotone max
-    over the delta equals ``max(prev, snapshot max)``. NULL timestamps
-    never pass; a table whose maxima are both NULL (empty) yields no
-    delta. Tables in ``state`` but not in ``tables`` keep their
-    watermark.
-    """
-    new_state = dict(state)
+    exchange, hence one AQE job, per table)."""
     if not tables:
-        return {}, new_state
+        return {}
     names = list(tables)
     probes = [
         df.select(F.lit(i).alias("t"), "created_at", "last_updated")
         for i, df in enumerate(tables.values())
     ]
-    maxima = {
+    seen = {
         names[r["t"]]: (r["c"], r["u"])
         for r in functools.reduce(DataFrame.unionAll, probes)
         .groupBy("t")
         .agg(F.max("created_at").alias("c"), F.max("last_updated").alias("u"))
         .collect()
     }
+    return {name: seen.get(name, (None, None)) for name in names}
+
+
+def incremental_extract(
+    tables: dict[str, DataFrame],
+    state: dict[str, Watermark],
+    inclusive: bool = False,
+    maxima: dict[str, tuple[datetime | None, datetime | None]] | None = None,
+) -> tuple[dict[str, DataFrame], dict[str, Watermark]]:
+    """Per-table dispatch (reference ``check_each_table``,
+    ``src/extract.py:202-238``): first sight of a table -> full scan;
+    otherwise delta-only. Returns only non-empty deltas, like the
+    reference (``src/extract.py:230-237``), and the advanced state. Pure:
+    the caller loads and commits the state (``plans.etl.extract`` commits
+    after staging).
+
+    The decision needs each table's snapshot maxima. ``maxima`` holds
+    those the caller already has (``plans.etl.extract`` memoizes them
+    under each source's stat signature); the tables it does not cover —
+    the sources whose signature changed — are scanned by ONE
+    :func:`table_maxima` job, and none starts when it covers them all.
+    Exact against the per-delta rule
+    ``max(prev, delta_watermark(extract_delta(...)))``: a row passes the
+    delta predicate iff one of its audit timestamps passes the stored
+    watermark (``>``, or ``>=`` when inclusive), so the delta is
+    non-empty iff a snapshot maximum does, and the monotone max over the
+    delta equals ``max(prev, snapshot max)``. NULL timestamps never
+    pass; a table whose maxima are both NULL (empty) yields no delta.
+    Tables in ``state`` but not in ``tables`` keep their watermark.
+    """
+    known = dict(maxima or {})
+    known.update(table_maxima({n: df for n, df in tables.items() if n not in known}))
+    new_state = dict(state)
 
     def passes(seen: datetime | None, mark: datetime) -> bool:
         return seen is not None and (seen >= mark if inclusive else seen > mark)
 
     out: dict[str, DataFrame] = {}
     for name, df in tables.items():
-        c, u = maxima.get(name, (None, None))
+        c, u = known[name]
         if c is None and u is None:
             continue  # empty delta — reference drops empties too
         wm = state.get(name)

@@ -17,13 +17,16 @@ from __future__ import annotations
 
 import os
 import threading
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from pw_etl_scrumptious_squad_spark.operators import dims, facts
-from pw_etl_scrumptious_squad_spark.operators.cdc import incremental_extract
+from pw_etl_scrumptious_squad_spark.operators.cdc import (
+    incremental_extract,
+    table_maxima,
+)
 from pw_etl_scrumptious_squad_spark.schemas import OLTP_SCHEMAS
 from pw_etl_scrumptious_squad_spark.sources import parquet as lake
 from pw_etl_scrumptious_squad_spark.sources.state import (
@@ -34,16 +37,19 @@ from pw_etl_scrumptious_squad_spark.sources.state import (
 )
 
 OLTP_TABLES = sorted(OLTP_SCHEMAS)
+T = TypeVar("T")
 
 
-def _run_overlapped(tasks: list[Callable[[], None]]) -> None:
-    """Run independent Spark writes concurrently on a pool of
+def _run_overlapped(tasks: list[Callable[[], T]]) -> list[T]:
+    """Run independent Spark reads or writes concurrently on a pool of
     ``min(len(tasks), defaultParallelism)`` ``InheritableThread`` workers,
-    so each write's jobs carry the caller's job group and local
+    so each task's jobs carry the caller's job group and local
     properties (precedent: ``operators.graph``'s overlapped edge count).
-    Every started task finishes before this returns; after a failure no
-    new task starts, and the first failure is re-raised."""
-    pending = list(reversed(tasks))
+    Returns the tasks' results in task order. Every started task
+    finishes before this returns; after a failure no new task starts,
+    and the first failure is re-raised."""
+    pending = list(enumerate(tasks))[::-1]
+    results: list = [None] * len(tasks)
     errors: list[Exception] = []
     lock = threading.Lock()
 
@@ -52,9 +58,9 @@ def _run_overlapped(tasks: list[Callable[[], None]]) -> None:
             with lock:
                 if errors or not pending:
                     return
-                task = pending.pop()
+                i, task = pending.pop()
             try:
-                task()
+                results[i] = task()
             except Exception as exc:  # re-raised by the caller below
                 with lock:
                     errors.append(exc)
@@ -67,6 +73,14 @@ def _run_overlapped(tasks: list[Callable[[], None]]) -> None:
         t.join()
     if errors:
         raise errors[0]
+    return results
+
+
+# Snapshot maxima of every local source extract last scanned in this
+# process: abs source table path -> (its lake.table_signature taken before
+# the read, (max created_at, max last_updated)). One entry per source
+# table, replaced when its signature changes.
+_MAXIMA: dict[str, tuple[tuple, tuple]] = {}
 
 
 def extract(
@@ -81,19 +95,50 @@ def extract(
 
     Writes only non-empty deltas to the staging lake, overwriting per table —
     the reference's delta-propagation contract (``src/extract.py:250-253``).
-    One state read, one Spark job for every table's CDC decision
-    (``incremental_extract``), overlapped staging writes, then one state
-    commit: a failed staging write leaves the stored watermarks as they
-    were, so the next cycle stages the same rows again.
+    One state read, the sources read as one overlapped wave, one Spark job
+    for the snapshot maxima of the sources whose signature changed
+    (``table_maxima``, none when nothing changed), the per-table CDC
+    decision (``incremental_extract``), overlapped staging writes, then
+    one state commit: a failed staging write leaves the stored watermarks
+    as they were, so the next cycle stages the same rows again.
+
+    Memo trust rule: a source is signed with ``lake.table_signature``
+    (file stat) BEFORE it is read, and its maxima are reused while that
+    signature holds — the rule ``lake._PLAN_MEMO`` and the star refresh
+    already trust. A write in between leaves a stale signature, which
+    only makes the next cycle scan again. Schemed paths have no
+    signature and are always scanned. The memo holds maxima, not
+    decisions, so ``inclusive`` ties and the monotone watermark merge
+    are exactly those of a full scan.
     """
-    snapshots = {
-        name: lake.read_table(spark, source_dir, name, OLTP_SCHEMAS[name])
-        for name in OLTP_TABLES
-        if lake.table_exists(source_dir, name)
-    }
+    names = [name for name in OLTP_TABLES if lake.table_exists(source_dir, name)]
+    sigs = {name: lake.table_signature(source_dir, name) for name in names}
+    frames = _run_overlapped(
+        [
+            lambda name=name: lake.read_table(
+                spark, source_dir, name, OLTP_SCHEMAS[name]
+            )
+            for name in names
+        ],
+    )
+    snapshots = dict(zip(names, frames))
+    keys = {name: os.path.abspath(lake.table_path(source_dir, name)) for name in names}
+    known = {}
+    for name in names:
+        entry = _MAXIMA.get(keys[name])  # stored signatures are never None
+        if entry is not None and entry[0] == sigs[name]:
+            known[name] = entry[1]
+    scanned = table_maxima(
+        {name: df for name, df in snapshots.items() if name not in known}
+    )
+    for name, maxima in scanned.items():
+        if sigs[name] is not None:
+            _MAXIMA[keys[name]] = (sigs[name], maxima)
     store = WatermarkStore(spark, state_path)
     state = store.load()
-    deltas, new_state = incremental_extract(snapshots, state, inclusive=inclusive)
+    deltas, new_state = incremental_extract(
+        snapshots, state, inclusive=inclusive, maxima={**known, **scanned}
+    )
     _run_overlapped(
         [
             lambda df=df, name=name: lake.write_table(df, staging_dir, name)

@@ -46,22 +46,24 @@ def read_table(
     :func:`table_exists`.
     """
     return _read_parquet_normalized(
-        spark, _resolved_path(base_dir, name), name, schema
+        spark, _resolved_path(base_dir, name, spark), name, schema
     )
 
 
-def _resolved_path(base_dir: str, name: str) -> str:
+def _resolved_path(
+    base_dir: str, name: str, spark: SparkSession | None = None
+) -> str:
     """The path :func:`read_table` scans for ``name``."""
     path = table_path(base_dir, name)
     # Round-8 snapshot isolation: a table written through the versioned
     # mutating path (upsert_table/compact_table) keeps its data in
     # immutable per-version dirs under <name>.manifest/; resolve the
     # latest committed snapshot so readers never see a mid-rewrite
-    # state. The probe is one local stat — schemed (s3a://, hdfs://)
-    # versioned tables use snapshot_read, which resolves through the
-    # Hadoop FS explicitly (keeps this hot path RPC-free).
-    if "://" not in path and os.path.isdir(_manifest_dir(base_dir, name)):
-        _, data_path = _resolve_snapshot(base_dir, name)
+    # state. A plain path pays one local stat (no Py4J round trip); a
+    # schemed (s3a://, viewfs://) path resolves through the Hadoop FS of
+    # ``spark``'s session, like snapshot_read.
+    if "://" in path or os.path.isdir(_manifest_dir(base_dir, name)):
+        _, data_path = _resolve_snapshot(base_dir, name, spark=spark)
         if data_path is not None:
             path = data_path
     return path
@@ -73,9 +75,9 @@ def table_signature(base_dir: str, name: str) -> tuple | None:
     trusts, so any rewrite, append or delete of the table changes it.
     ``None`` for a missing table or a schemed (``s3a://``, ``file://``)
     path, which has no local stat."""
-    path = _resolved_path(base_dir, name)
-    if "://" in path:
+    if "://" in base_dir:
         return None
+    path = _resolved_path(base_dir, name)
     sig = _stat_signature(path)
     return None if sig is None else (path, sig)
 
@@ -343,8 +345,8 @@ def snapshot_read(
     ``version=None`` reads the latest committed snapshot;
     ``version=N`` reads exactly version N (raising if it was never
     committed or its data dir was vacuumed). Works on any scheme the
-    Hadoop FS speaks — unlike :func:`read_table`'s local-only manifest
-    auto-resolution. Resolution follows the ``fs_*`` routing rule: a
+    Hadoop FS speaks, as :func:`read_table`'s latest-version resolution
+    does. Resolution follows the ``fs_*`` routing rule: a
     plain ``base_dir`` resolves through ``os``, a ``scheme://`` one
     through the Hadoop FileSystem of ``spark``'s session."""
     _, data_path = _resolve_snapshot(base_dir, name, version, spark)
@@ -897,7 +899,7 @@ def read_table_evolving(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return (
         spark.read.option("mergeSchema", "true")
-        .parquet(_resolved_path(base_dir, name))
+        .parquet(_resolved_path(base_dir, name, spark))
     )
 
 

@@ -4,6 +4,7 @@ created_at, row 8 by last_updated, row 9 ties the watermark and is dropped
 by the strict-> predicate)."""
 
 import functools
+import os
 import time
 import uuid
 from datetime import datetime
@@ -184,11 +185,48 @@ def _tagged_rows(deltas):
     return sorted(functools.reduce(DataFrame.unionAll, tagged).collect(), key=repr)
 
 
-@pytest.mark.parametrize("inclusive", [False, True])
-def test_one_job_decision_matches_per_delta_rule(spark, inclusive):
+_REFERENCE: dict = {}
+
+
+def _reference_answer(spark, inclusive):
+    """:func:`_reference_extract` over the hostile inputs, computed once
+    per session and ``inclusive`` setting: the inputs are literals, so
+    the plain and the memoized decision are checked against one answer."""
+    key = (spark.sparkContext.applicationId, inclusive)
+    if key not in _REFERENCE:
+        _REFERENCE[key] = _reference_extract(*_hostile_inputs(spark), inclusive)
+    return _REFERENCE[key]
+
+
+# tables whose maxima the memoized case hands the decision precomputed,
+# one of each kind: changed, empty, tied, first sight, all-NULL first sight
+MEMOIZED = ("nulls", "empty", "ties", "fresh", "fresh_nulls")
+
+
+def _driver_maxima(df):
+    """``(max created_at, max last_updated)`` of a local literal frame,
+    computed on the driver — the memo an earlier cycle would hold."""
+    rows = df.collect()
+    return tuple(
+        max((r[c] for r in rows if r[c] is not None), default=None)
+        for c in ("created_at", "last_updated")
+    )
+
+
+@pytest.mark.parametrize(
+    "inclusive,memoized",
+    [(False, False), (True, False), (False, True), (True, True)],
+    ids=["False", "True", "False-memoized", "True-memoized"],
+)
+def test_one_job_decision_matches_per_delta_rule(spark, inclusive, memoized):
     tables, state = _hostile_inputs(spark)
-    deltas, new_state = incremental_extract(tables, state, inclusive=inclusive)
-    want_deltas, want_state = _reference_extract(tables, state, inclusive)
+    maxima = (
+        {name: _driver_maxima(tables[name]) for name in MEMOIZED} if memoized else None
+    )
+    deltas, new_state = incremental_extract(
+        tables, state, inclusive=inclusive, maxima=maxima
+    )
+    want_deltas, want_state = _reference_answer(spark, inclusive)
     assert new_state == want_state
     assert sorted(deltas) == sorted(want_deltas)
     assert _tagged_rows(deltas) == _tagged_rows(want_deltas)
@@ -228,6 +266,42 @@ def test_incremental_extract_job_budget_is_flat_in_table_count(spark, totesys):
     assert len(totesys) == 11
     assert small == full
     assert 1 <= full <= 2, full
+
+
+def test_extract_rescans_a_hard_delete_without_regressing(
+    spark, totesys, tmp_path, monkeypatch
+):
+    """A source rewritten with its newest rows hard-deleted has lower
+    maxima than the memo holds: its signature changed, so extract scans
+    it again (and only it), the memo takes the lowered maxima, and the
+    monotone merge keeps the stored watermark."""
+    from pw_etl_scrumptious_squad_spark.plans import etl
+    from pw_etl_scrumptious_squad_spark.sources import parquet as lake
+
+    source = str(tmp_path / "oltp")
+    staging = str(tmp_path / "staging")
+    state = str(tmp_path / "state.parquet")
+    sales = _sales_with_late_rows(spark, totesys)
+    lake.write_table(sales, source, "sales_order")
+    lake.write_table(totesys["design"], source, "design")
+    etl.extract(spark, source, staging, state)
+    before = WatermarkStore(spark, state).load()
+    assert before["sales_order"] == Watermark(LATER_CREATED, LATER_UPDATED)
+
+    lake.write_table(sales.filter("sales_order_id NOT IN (7, 8)"), source, "sales_order")
+    scanned = []
+    real = etl.table_maxima
+
+    def spy(tables):
+        scanned.append(sorted(tables))
+        return real(tables)
+
+    monkeypatch.setattr(etl, "table_maxima", spy)
+    assert etl.extract(spark, source, staging, state) == {}
+    assert scanned == [["sales_order"]]
+    key = os.path.abspath(lake.table_path(source, "sales_order"))
+    assert etl._MAXIMA[key][1] == (SEED_TS, SEED_TS)
+    assert WatermarkStore(spark, state).load() == before
 
 
 # ---------------------------------------------------------------------------

@@ -214,6 +214,75 @@ def test_failed_staging_write_keeps_watermarks(spark, totesys, tmp_path, monkeyp
     assert after["sales_order"].last_updated == LATER_UPDATED
 
 
+def test_run_overlapped_returns_results_in_task_order(spark):
+    """extract zips the read wave's results back onto table names: each
+    result lands at its task's index whatever order the workers finish."""
+    import sys
+    import time
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = etl._run_overlapped(
+            [lambda i=i: time.sleep(i * 7 % 5 / 1000) or i for i in range(64)]
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == list(range(64))
+
+
+def test_extract_job_budget_follows_the_changed_sources(
+    spark, totesys, tmp_path, monkeypatch
+):
+    """extract scans only the sources whose signature changed: over
+    unchanged sources the state read is its one Spark job, a rewritten
+    source is the only table its maxima job sees, and the memo keeps one
+    entry per source path however often a source is rewritten."""
+    import os
+    from datetime import timedelta
+
+    from pw_etl_scrumptious_squad_spark.sources.state import Watermark, WatermarkStore
+    from tests.conftest import LATER_UPDATED, SEED_TS
+    from tests.test_cdc import _jobs_started
+
+    source = str(tmp_path / "oltp")
+    staging = str(tmp_path / "staging")
+    state = str(tmp_path / "state.parquet")
+    names = ("design", "payment", "sales_order")
+    for name in names:
+        lake.write_table(totesys[name], source, name)
+    etl.extract(spark, source, staging, state)
+    assert _jobs_started(spark, lambda: etl.extract(spark, source, staging, state)) == 1
+
+    scanned = []
+    real = etl.table_maxima
+
+    def spy(tables):
+        scanned.append(sorted(tables))
+        return real(tables)
+
+    monkeypatch.setattr(etl, "table_maxima", spy)
+    payment = totesys["payment"]
+    for i in range(3):
+        newest = LATER_UPDATED + timedelta(seconds=i)
+        bumped = (
+            payment.limit(1)
+            .withColumn("payment_id", F.lit(100 + i))
+            .withColumn("last_updated", F.lit(newest).cast("timestamp_ntz"))
+        )
+        lake.write_table(payment.unionByName(bumped), source, "payment")
+        scanned.clear()
+        assert sorted(etl.extract(spark, source, staging, state)) == ["payment"]
+        assert scanned == [["payment"]]
+    key = os.path.abspath(lake.table_path(source, "payment"))
+    assert etl._MAXIMA[key][1] == (SEED_TS, newest)
+    assert WatermarkStore(spark, state).load()["payment"] == Watermark(SEED_TS, newest)
+    prefix = os.path.abspath(source) + os.sep
+    assert sorted(k for k in etl._MAXIMA if k.startswith(prefix)) == [
+        os.path.abspath(lake.table_path(source, name)) for name in names
+    ]
+
+
 def test_load_transactional_pins_a_consistent_star(spark, totesys, tmp_path):
     """Cross-table atomicity over the REAL 11-table star transform: two
     cycles, and between the second cycle's table writes a warehouse

@@ -121,6 +121,10 @@ def test_versioned_snapshots_through_non_file_scheme(spark, lake):
         for r in P.snapshot_read(spark, bucket, "wh").collect()
     }
     assert latest == {1: "a2", 2: "b"}
+    # read_table resolves the manifest on a schemed lake too
+    assert sorted(P.read_table(spark, bucket, "wh").collect()) == sorted(
+        P.snapshot_read(spark, bucket, "wh").collect()
+    )
     pinned = {
         r["id"]: r["v"]
         for r in P.snapshot_read(spark, bucket, "wh", version=1).collect()
@@ -141,6 +145,9 @@ def test_versioned_snapshots_through_non_file_scheme(spark, lake):
     assert {
         r["id"] for r in P.snapshot_read(spark, bucket, "wh").collect()
     } == {1, 2}
+    assert sorted(P.read_table(spark, bucket, "wh").collect()) == sorted(
+        P.snapshot_read(spark, bucket, "wh").collect()
+    )
     assert {
         r["id"]
         for r in P.snapshot_read(spark, bucket, "wh", version=1).collect()
